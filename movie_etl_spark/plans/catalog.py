@@ -3048,7 +3048,10 @@ def q_b1_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         # r19: the two bucketing investments are independent write jobs
         # over DIFFERENT source tables into different table dirs — run
         # them concurrently (guide §2.6) instead of serializing the
-        # small customer write behind the orders write
+        # small customer write behind the orders write. The two targets
+        # must stay distinct tables: two concurrent overwrite saveAsTable
+        # calls share one session catalog, and on one name they would
+        # race on the same warehouse dir and catalog entry
         def bucket(src: str, cols: tuple[str, str], key: str, table: str):
             _t(spark, sf_dir, src).select(*cols).write.bucketBy(
                 8, key

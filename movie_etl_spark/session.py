@@ -11,14 +11,24 @@ Scale notes (100 TB / 1000-executor design intent)
 - Session timezone is pinned to UTC so timestamp semantics are stable
   across engines (the DuckDB oracle is UTC-naive).
 - Arrow is enabled for all pandas interchange (vectorized UDF path).
+- Tungsten pages are sized from the driver heap (:func:`page_size_bytes`):
+  the smallest power of two, at least 1 MiB, with which one task can
+  still address the whole execution pool through its 8192-page table.
+  That is 1 MiB up to a ~14g heap, so small operators no longer pin
+  Spark's default 16-64 MiB pages, and it grows with larger heaps, so
+  no heap size can fill the table.
+- ``load_table`` reads the schema from one parquet footer on the driver,
+  so loading a table runs no Spark job.
 """
 
 from __future__ import annotations
 
+import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 #: Tables the driver materializes at each scale factor.
 TABLE_NAMES = (
@@ -37,10 +47,41 @@ TABLE_NAMES = (
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
+def _size_bytes(raw: str, unit: int = 1) -> int:
+    """A Spark size string ('128m', '2g', '4194304') as bytes; a bare
+    number counts in ``unit`` bytes. Raises ValueError otherwise."""
+    raw = raw.strip().lower()
+    for suffix, mult in (("k", 1 << 10), ("m", 1 << 20), ("g", 1 << 30), ("t", 1 << 40)):
+        if raw.endswith(suffix):
+            return int(float(raw[: -len(suffix)]) * mult)
+    return int(float(raw) * unit)
+
+
+def page_size_bytes(driver_memory: str) -> int:
+    """``spark.buffer.pageSize`` for a driver heap of ``driver_memory``.
+
+    TaskMemoryManager addresses a task's execution memory through a page
+    table of 8192 entries (13 page-number bits), so one task can hold at
+    most 8192 pages. A task running alone may claim the whole execution
+    pool, ``(heap - 300 MiB) * spark.memory.fraction (0.6)``, so
+    ``pool / 8192`` is the smallest page that can never fill the table
+    before the pool runs out. Spark's own default, ``pool / cores / 16``
+    clamped to 1-64 MiB, is 16-64 MiB at a 2-8g heap, and every sort,
+    hash aggregate, hash join and shuffle writer pins at least one page
+    even for a few hundred rows; pages that large outlive the young
+    generation and inflate the heap. Rounded up to a power of two, at
+    least 1 MiB. (A bare number is MiB, as for ``spark.driver.memory``.)
+    """
+    pool = int((_size_bytes(driver_memory, unit=1 << 20) - (300 << 20)) * 0.6)
+    smallest = max(1, -(-pool // 8192))
+    return max(1 << 20, 1 << (smallest - 1).bit_length())
+
+
 def get_spark(app_name: str = "movie-etl-spark", cpus: int | None = None) -> SparkSession:
     """Build (or fetch) the session with scale-appropriate defaults."""
     if cpus is None:
         cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
+    driver_memory = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g")
     builder = (
         SparkSession.builder.appName(app_name)
         .master(f"local[{cpus}]")
@@ -74,7 +115,8 @@ def get_spark(app_name: str = "movie-etl-spark", cpus: int | None = None) -> Spa
         # frames, not plain shuffle stages, so DynamicJoinSelection
         # never sees the map stats it needs) — see OPTIMIZATION_r18.md.
         .config("spark.sql.files.maxPartitionBytes", "128m")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
+        .config("spark.driver.memory", driver_memory)
+        .config("spark.buffer.pageSize", str(page_size_bytes(driver_memory)))
         # UI off by default (benches measure compute, not the status
         # store); SPARK_GRAFT_UI=true turns it on for probe runs that
         # sample executor peakMemoryMetrics over its REST API
@@ -123,7 +165,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     if name == "events":
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    df = _read_parquet(spark, os.path.join(sf_dir, f"{name}.parquet"))
     if name == "events":
         ts_type = dict(df.dtypes).get("ts")
         if ts_type == "bigint":
@@ -131,6 +173,40 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         elif ts_type == "timestamp_ntz":
             df = df.withColumn("ts", F.col("ts").cast("timestamp"))
     return df
+
+
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` without the schema-inference job.
+
+    Inference runs one Spark job per read to open a footer on an
+    executor. With ``mergeSchema`` off Spark only ever reads the first
+    data file's footer (in path order, skipping ``_*``/``.*`` names), so
+    reading that same footer on the driver, through Spark's own
+    converter under the session's current confs, yields the identical
+    schema with no job. A directory with no data file at its top level
+    (partitioned or empty) is left to Spark's inference.
+    """
+    jvm, jss = spark._jvm, spark._jsparkSession
+    hadoop_conf = jss.sessionState().newHadoopConf()
+    hpath = jvm.org.apache.hadoop.fs.Path(path)
+    fs = hpath.getFileSystem(hadoop_conf)
+    status = fs.getFileStatus(hpath)
+    if status.isDirectory():
+        # globStatus returns names in sorted order
+        children = fs.globStatus(jvm.org.apache.hadoop.fs.Path(hpath, "[!_.]*"))
+        status = next((c for c in children if c.isFile()), None)
+        if status is None:
+            return spark.read.parquet(path)
+    parquet = jvm.org.apache.spark.sql.execution.datasources.parquet
+    metadata = parquet.ParquetFooterReader.readFooter(
+        jvm.org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(status, hadoop_conf),
+        jvm.org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS,
+    )
+    schema = parquet.ParquetFileFormat.readSchemaFromFooter(
+        jvm.org.apache.parquet.hadoop.Footer(status.getPath(), metadata),
+        parquet.ParquetToSparkSchemaConverter(jss.sessionState().conf()),
+    )
+    return spark.read.schema(StructType.fromJson(json.loads(schema.json()))).parquet(path)
 
 
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
@@ -195,14 +271,8 @@ def release_caches(blocking: bool = False, destroy_broadcasts: bool = False) -> 
 
 def _conf_bytes(spark: SparkSession, key: str, default: int) -> int:
     """A size conf as bytes; Spark accepts '128m'/'4194304'-style values."""
-    raw = str(spark.conf.get(key, str(default))).strip().lower()
-    mult = 1
-    for suffix, m in (("k", 1 << 10), ("m", 1 << 20), ("g", 1 << 30)):
-        if raw.endswith(suffix):
-            raw, mult = raw[: -len(suffix)], m
-            break
     try:
-        return int(float(raw) * mult)
+        return _size_bytes(str(spark.conf.get(key, str(default))))
     except ValueError:
         return default
 
