@@ -5,18 +5,19 @@ The reference does all of these one row at a time over the network
 (point SELECTs / MATCH probes). Set-oriented equivalents:
 
 - existence probe (J1/J2)      -> left_semi / left_anti join
-- referential edge build (J3)  -> double inner join on both endpoints
+- referential edge build (J3)  -> semi join on both endpoints, or a
+                                 NULL filter when the nodes come from
+                                 the edge rows' own frame
 - parent-company walk (J4)     -> iterative self-join to fixpoint
 
-Scale notes: endpoint tables that are dimensions (genres, languages,
-countries, providers — all bounded) are broadcast; fact-to-fact joins
-are left to Catalyst + AQE (sort-merge or shuffled hash, skew-split at
-runtime).
+Scale notes: the joins carry no hints. AQE broadcasts a side that turns
+out small at runtime; fact-to-fact joins are left to Catalyst + AQE
+(sort-merge or shuffled hash, skew-split at runtime).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from movie_etl_spark.functions.cleaning import relationship_id
@@ -42,54 +43,58 @@ def build_edges(
     tail_key: str,
     rel_type: str,
     payload: list[str] | None = None,
-    broadcast_tails: bool = False,
-    hash_build_nodes: bool = False,
 ) -> DataFrame:
     """J3/K4 — referential-integrity edge builder
-    (tasks/kg_task.py:43-80): an edge exists only if BOTH endpoints
-    exist, i.e. two inner (semi) joins, plus the synthetic
+    (tasks/kg_task.py:43-80) for node tables that come from OUTSIDE the
+    edge rows' own frame (a separately loaded table, another source):
+    an edge exists only if BOTH endpoints exist, i.e. two semi joins,
+    then :func:`edge_table`'s projection and synthetic
     ``relationship_id`` (kg_task.py:61).
 
-    ``broadcast_tails`` marks the tail node table as a broadcastable
-    dimension (genre/language/country/provider — always small).
-    ``hash_build_nodes`` forces SHUFFLE_HASH builds on the key-only
-    node sides — pass it when the node frames' size stats are broken
-    (checkpointed inputs) and the planner would otherwise sort the fat
-    edges stream through a SortMergeJoin (see the inline note).
+    When both node tables are derived from the same frame as the edge
+    rows, every non-NULL key exists by construction and the semi joins
+    can only drop NULL keys — call :func:`edge_table` directly instead.
+
+    The joins carry no hint: AQE turns a semi join into a broadcast at
+    runtime when a node side is small, and fact-sized node tables stay
+    shuffled.
     """
-    payload = payload or []
     tails = tail_nodes.select(tail_key).dropDuplicates([tail_key])
     heads = head_nodes.select(head_key).dropDuplicates([head_key])
-    if broadcast_tails:
-        tails = F.broadcast(tails)
-    if hash_build_nodes:
-        # SHUFFLE_HASH (r13): callers pass this when the node frames'
-        # size statistics are broken — g2's reuse_shared path
-        # localCheckpoints Movie/Person, after which neither static
-        # planning nor AQE will ever broadcast them and the semi joins
-        # regress to SortMergeJoins that SORT the fat edges stream
-        # (the two heaviest g2 stages spilled ~1.9 GB at sf3;
-        # per-stage spill attribution, BASELINE.md "r13: graph family").
-        # Hash-building the key-only node side streams the fat side
-        # with no sort — scale-safe: the build is per-partition
-        # (keys/partitions rows), not a broadcast. Left OFF by default
-        # so stats-rich inputs (f6/g1's parquet-derived nodes) keep
-        # their statically-planned broadcasts.
-        heads = heads.hint("shuffle_hash")
-        if not broadcast_tails:
-            tails = tails.hint("shuffle_hash")
-    out = (
-        edges.join(heads, head_key, "left_semi")
-        .join(tails, tail_key, "left_semi")
+    return edge_table(
+        edges.join(heads, head_key, "left_semi").join(tails, tail_key, "left_semi"),
+        head_key,
+        tail_key,
+        rel_type,
+        payload,
+    )
+
+
+def edge_table(
+    edges: DataFrame,
+    head_key: str,
+    tail_key: str,
+    rel_type: str | Column,
+    payload: list[str] | None = None,
+) -> DataFrame:
+    """Edge rows ``(head_id, tail_id, payload..., rel_type,
+    relationship_id)`` from bridge rows whose endpoints exist by
+    construction: only rows with a NULL key on either side drop, which
+    is all a semi join against keys taken from the same frame could
+    remove. ``rel_type`` is a literal, or a column when one bridge fans
+    out into several relationship types."""
+    if isinstance(rel_type, str):
+        rel_type = F.lit(rel_type)
+    return (
+        edges.filter(F.col(head_key).isNotNull() & F.col(tail_key).isNotNull())
         .select(
             F.col(head_key).alias("head_id"),
             F.col(tail_key).alias("tail_id"),
-            *[F.col(p) for p in payload],
+            *(payload or []),
+            rel_type.alias("rel_type"),
         )
-        .withColumn("rel_type", F.lit(rel_type))
         .withColumn("relationship_id", relationship_id("head_id", "tail_id"))
     )
-    return out
 
 
 def hierarchy_closure(

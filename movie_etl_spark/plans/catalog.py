@@ -2101,11 +2101,10 @@ def q_g2_full_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 17 branch re-reads stream through the OS page cache while the
     # whole unified pool stays available to the branch sorts/aggs —
     # measured A/B in BASELINE.md "r11: g2 at sf3/8g".
-    # LAZY since r19 (VERDICT r18 item #3): build_movie_graph's
-    # size-probe count is the first action over this frame, so ONE job
-    # now materializes the corpus blocks AND returns the count — the
-    # former eager shape paid a separate full-corpus disk re-read just
-    # to count the rows it had only just written.
+    # LAZY: the blocks are written by the first branch that reads them.
+    # g2 still runs 2 jobs while it builds: under AQE even
+    # localCheckpoint(eager=False) has to finalize the plan to get its
+    # RDD, which runs the doc-assembly join's two shuffle-map stages.
     from pyspark.storagelevel import StorageLevel
 
     clean = clean_movie_details(raw).localCheckpoint(
@@ -2119,7 +2118,7 @@ def q_g2_full_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
             "parent_company_id"
         ),
     )
-    graph = build_movie_graph(clean, companies=companies, reuse_shared=True)
+    graph = build_movie_graph(clean, companies=companies)
 
     def num(c: str):
         return F.substring(F.col(c), 2, 12).cast("bigint")
@@ -3051,27 +3050,35 @@ def q_b1_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         # small customer write behind the orders write. The two targets
         # must stay distinct tables: two concurrent overwrite saveAsTable
         # calls share one session catalog, and on one name they would
-        # race on the same warehouse dir and catalog entry
+        # race on the same warehouse dir and catalog entry.
+        # InheritableThread copies the caller's local properties (job
+        # group, scheduler pool) into each writer, which a raw Python
+        # thread does not under PySpark's pinned-thread mode
+        from pyspark import InheritableThread
+
+        errors: list[Exception] = []
+
         def bucket(src: str, cols: tuple[str, str], key: str, table: str):
-            _t(spark, sf_dir, src).select(*cols).write.bucketBy(
-                8, key
-            ).sortBy(key).mode("overwrite").saveAsTable(table)
+            try:
+                _t(spark, sf_dir, src).select(*cols).write.bucketBy(
+                    8, key
+                ).sortBy(key).mode("overwrite").saveAsTable(table)
+            except Exception as e:  # re-raised on the caller's thread
+                errors.append(e)
 
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            jobs = [
-                pool.submit(
-                    bucket, "orders", ("o_custkey", "o_totalprice"),
-                    "o_custkey", t_orders,
-                ),
-                pool.submit(
-                    bucket, "customer", ("c_custkey", "c_mktsegment"),
-                    "c_custkey", t_custs,
-                ),
-            ]
-            for j in jobs:
-                j.result()
+        writers = [
+            InheritableThread(target=bucket, args=args)
+            for args in (
+                ("orders", ("o_custkey", "o_totalprice"), "o_custkey", t_orders),
+                ("customer", ("c_custkey", "c_mktsegment"), "c_custkey", t_custs),
+            )
+        ]
+        for w in writers:
+            w.start()
+        for w in writers:
+            w.join()
+        if errors:
+            raise errors[0]
     orders = spark.table(t_orders)
     custs = spark.table(t_custs)
     # merge hint: without it the tiny dim would broadcast and the

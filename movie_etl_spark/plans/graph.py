@@ -3,9 +3,11 @@
 The reference's final product is a Neo4j graph (8 node labels, ~17
 relationship types; SURVEY.md §1.1). Here the graph is a set of columnar
 tables — one DataFrame per node label with an enforced-unique id, and
-edge DataFrames ``(head_id, tail_id, rel_type, relationship_id,
-payload...)`` built through the referential-integrity join
-(operators.joins.build_edges = tasks/kg_task.py:43-80 semantics).
+edge DataFrames ``(head_id, tail_id, payload..., rel_type,
+relationship_id)`` that keep the reference's referential integrity
+(tasks/kg_task.py:43-80): by construction where both endpoints come
+from the same cleaned frame, by semi join (operators.joins.build_edges)
+where a node table comes from outside it.
 
 Edge uniqueness mirrors kg_scripts/1_constraints.cypher — note the
 AVAILABLE_ON composite key is (relationship_id, type), not
@@ -18,7 +20,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from movie_etl_spark.functions.cleaning import decode_department, relationship_id
-from movie_etl_spark.operators.joins import build_edges
+from movie_etl_spark.operators.joins import build_edges, edge_table, keep_existing
 from movie_etl_spark.operators.reshape import (
     explode_bridge,
     explode_cast,
@@ -26,39 +28,6 @@ from movie_etl_spark.operators.reshape import (
     invert_watch_providers,
 )
 from movie_etl_spark.operators.upsert import dedup_by_key
-
-#: largest movie count for which build_movie_graph's reuse_shared
-#: checkpoints stay in memory (MEMORY_AND_DISK); above it they go
-#: DISK_ONLY — see the size-conditional note inside build_movie_graph.
-#: 2M keeps the measured-flat sf1 point (1.5M movies, ~0.5 GB) in
-#: memory; factor-30+ corpora (4.5M/15M movies, 1-3 GB of node
-#: strings) take the disk trade.
-_SHARED_NODES_MEMORY_MAX = 2_000_000
-
-#: smallest JVM heap on which the factor-30+ hash-build relations are
-#: known to fit (measured: complete at 7g, OOM at 6g — BASELINE.md r14
-#: g2 table).  Below this, big-corpus edge builds fall back to SMJ.
-_HASH_BUILD_MIN_HEAP_BYTES = 7 * 1024**3
-
-
-def _session_heap_bytes(df: DataFrame) -> int:
-    """JVM heap budget the edge builds will run under.  local[*]
-    executes in the driver JVM (driver.memory); a real cluster's
-    builds live in executors (executor.memory)."""
-    try:
-        sc = df.sparkSession.sparkContext
-        # true local mode only: 'local', 'local[N]', 'local[N,F]'.
-        # 'local-cluster[...]' runs SEPARATE executor JVMs sized by
-        # executor.memory, so it must fall through (ADVICE r15)
-        master = sc.master
-        key = (
-            "spark.driver.memory"
-            if master == "local" or master.startswith("local[")
-            else "spark.executor.memory"
-        )
-        return int(sc._jsc.sc().conf().getSizeAsBytes(key, "1g"))
-    except Exception:  # conf probe must never fail the build (e.g. a
-        return 1024**3  # Connect session without _jsc -> SMJ, the safe side
 
 
 def movie_nodes(clean_movies: DataFrame) -> DataFrame:
@@ -95,128 +64,51 @@ def build_movie_graph(
     clean_movies: DataFrame,
     collections: DataFrame | None = None,
     companies: DataFrame | None = None,
-    reuse_shared: bool = False,
 ) -> dict[str, DataFrame]:
     """Assemble the node/edge table set. Returns a dict keyed by
     ``nodes/<Label>`` and ``edges/<REL_TYPE>``.
 
-    Scale: all dimension-side edges (genre/language/country) broadcast
-    their tail node table; fact-to-fact edges (ACTED_IN etc.) shuffle on
-    the join key and AQE handles skew (one blockbuster movie with a
-    10k-person crew is exactly the skewed-key case).
+    Integrity by construction: like the reference, which builds its
+    graph from one doc per movie (tasks/kg_task.py:43-80), every Movie,
+    Person, Genre, Language, Country and (derived) Collection node here
+    is projected from ``clean_movies`` itself, and so is every bridge an
+    edge table is built from. Each non-NULL key a bridge holds therefore
+    names an existing node, and the only rows an integrity semi join
+    could drop are those with a NULL key. (This needs ``clean_movies``
+    to read the same rows each time a table re-reads it, which a
+    deterministic plan or a checkpoint gives.) Such edges are built by
+    :func:`~movie_etl_spark.operators.joins.edge_table`, a NULL filter on
+    both keys with the same output as ``build_edges``. Only node tables
+    that come from outside ``clean_movies`` — ``companies`` (PRODUCED_BY
+    tails, COMPANY_PART_OF) and a passed ``collections`` table — are
+    checked with semi joins: ``build_edges``, or ``keep_existing`` on
+    PRODUCED_BY's tail side alone.
 
-    ``reuse_shared`` materializes (localCheckpoint) the two node tables
-    every edge build joins against — Movie and Person — so consumers
-    that execute MANY of the returned tables as separate actions (the
-    17-table full materialization; g2's parity sweep) don't re-run the
-    dedup-window lineage per action. The storage level is
-    size-conditional (r14, VERDICT r13 item 3) — in memory for small
-    corpora, DISK_ONLY past ``_SHARED_NODES_MEMORY_MAX`` movies (see
-    the inline note). The EAGER materialization also matters: it runs
-    the two dedup-window sorts to completion BEFORE the many-branch
-    consumer action, so their execution peaks don't stack on the
-    branch aggregates' (measured: splitting key-only checkpoints out
-    and letting the full frames recompute inside the 17-branch union
-    raised the sf10 execution peak 3008 -> 4735 MB and the wall
-    218 -> 350 s). Since r19 the two materializations run CONCURRENTLY
-    with each other (they are independent jobs over the same
-    checkpointed corpus — guide §2.6) while still preceding the branch
-    action. At cluster scale the same role is played by writing
-    nodes first and reading them back for the edge builds; leave False
-    when only one or two tables will execute.
+    Every table is a lazy DataFrame over ``clean_movies``. A consumer
+    that executes many of them should materialize ``clean_movies`` once
+    first (q_g2 localCheckpoints it) so each table re-reads those blocks
+    instead of the lineage behind them.
     """
-    from pyspark.storagelevel import StorageLevel
-
-    shared_level = StorageLevel.MEMORY_AND_DISK
-    hash_builds = reuse_shared
-    if reuse_shared:
-        # Size-conditional storage level (r14): one cheap count picks
-        # the trade. Small corpora keep the node tables in memory —
-        # the 17-branch re-reads are free and the frames are a few MB.
-        # Past the cap the checkpoints go DISK_ONLY: at factor 100 the
-        # in-memory level held ~3 GB of node strings in storage memory
-        # for data the edge builds never read (they select the key
-        # before their semi joins), and freeing the unified pool for
-        # the branch sorts measured g2 sf10 218 -> 176.7 s with the
-        # query completing at 7 GiB where 8 was required — while at
-        # bench scale the catalog-warm g2 cell paid ~+2 s of real disk
-        # re-reads for memory it never needed back.
-        if clean_movies.select("movie_id").count() > _SHARED_NODES_MEMORY_MAX:
-            shared_level = StorageLevel.DISK_ONLY
-            # Heap-conditional join strategy (r15): the SHUFFLE_HASH
-            # builds' hash relations are non-spillable — at factor-30+
-            # node counts they are what holds g2's floor at 7 GiB
-            # (measured: OOM at 6g). On a smaller heap the spillable
-            # SortMergeJoin completes where hash dies (sf10/6g: SMJ
-            # 224.0 s vs hash OOM; hash keeps the 176.7 s fast path
-            # whenever the heap affords it). Small corpora never enter
-            # here — their relations are a few MB and hash is strictly
-            # better.
-            if _session_heap_bytes(clean_movies) < _HASH_BUILD_MIN_HEAP_BYTES:
-                hash_builds = False
-
     movies = movie_nodes(clean_movies)
-    persons = person_nodes(clean_movies)
-    if reuse_shared:
-        # r19 (VERDICT r18 item #3): the two eager shared-node
-        # materializations are INDEPENDENT jobs over the same
-        # checkpointed corpus, so run them concurrently (guide §2.6 —
-        # overlap independent jobs; FIFO scheduling back-fills the
-        # small movie dedup into cores the bigger person explode+dedup
-        # leaves idle) instead of paying their walls serially. They
-        # still complete strictly BEFORE the many-branch consumer
-        # action, which is what the r14 serialized-peaks adjudication
-        # actually required — the only new overlap is the small movie
-        # sort on top of the person sort, bounded by the movie table's
-        # size, not the branch count.
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            f_movies = pool.submit(
-                movies.localCheckpoint, storageLevel=shared_level
-            )
-            f_persons = pool.submit(
-                persons.localCheckpoint, storageLevel=shared_level
-            )
-            movies = f_movies.result()
-            persons = f_persons.result()
     out: dict[str, DataFrame] = {"nodes/Movie": movies}
 
-    genre_bridge = explode_bridge(clean_movies, "movie_id", "genre_ids", "genre_id")
-    genre_nodes = genre_bridge.select("genre_id").dropDuplicates(["genre_id"])
-    out["nodes/Genre"] = genre_nodes
-    out["edges/HAS_GENRE"] = build_edges(
-        genre_bridge, movies, genre_nodes, "movie_id", "genre_id", "HAS_GENRE",
-        broadcast_tails=True,
-    )
+    for label, rel, array_col, key in (
+        ("Genre", "HAS_GENRE", "genre_ids", "genre_id"),
+        ("Language", "HAS_LANGUAGE", "language_ids", "language_id"),
+        ("Country", "PRODUCTION_COUNTRY", "country_ids", "country_id"),
+    ):
+        bridge = explode_bridge(clean_movies, "movie_id", array_col, key)
+        out[f"nodes/{label}"] = bridge.select(key).dropDuplicates([key])
+        out[f"edges/{rel}"] = edge_table(bridge, "movie_id", key, rel)
 
-    lang_bridge = explode_bridge(clean_movies, "movie_id", "language_ids", "language_id")
-    lang_nodes = lang_bridge.select("language_id").dropDuplicates(["language_id"])
-    out["nodes/Language"] = lang_nodes
-    out["edges/HAS_LANGUAGE"] = build_edges(
-        lang_bridge, movies, lang_nodes, "movie_id", "language_id", "HAS_LANGUAGE",
-        broadcast_tails=True,
-    )
-
-    country_bridge = explode_bridge(clean_movies, "movie_id", "country_ids", "country_id")
-    out["nodes/Country"] = country_bridge.select("country_id").dropDuplicates(["country_id"])
-    out["edges/PRODUCTION_COUNTRY"] = build_edges(
-        country_bridge, movies, out["nodes/Country"], "movie_id", "country_id",
-        "PRODUCTION_COUNTRY", broadcast_tails=True,
-    )
-
-    out["nodes/Person"] = persons
+    out["nodes/Person"] = person_nodes(clean_movies)
 
     acted = explode_cast(clean_movies).withColumnRenamed("character", "role")
     # a person with multiple characters in one movie is one ACTED_IN row
     # (relationship_id uniqueness, 1_constraints.cypher); lowest role wins
     # deterministically
     out["edges/ACTED_IN"] = dedup_by_key(
-        build_edges(
-            acted, movies, persons, "movie_id", "person_id", "ACTED_IN",
-            payload=["role"],
-            hash_build_nodes=hash_builds,
-        ),
+        edge_table(acted, "movie_id", "person_id", "ACTED_IN", payload=["role"]),
         ["relationship_id"],
         order_col="role",
     )
@@ -227,27 +119,9 @@ def build_movie_graph(
     # unknown departments drop (the reference raises KeyError —
     # utils/etl.py:36-39; we choose explicit inner-join semantics)
     crew = crew.filter(F.col("rel").isNotNull())
-    # same checkpointed-stats fix as build_edges' hash_build_nodes:
-    # hash-build the key-only node sides so the fat crew stream is
-    # never sorted (see operators/joins.py)
-    crew_heads = movies.select("movie_id")
-    crew_tails = persons.select("person_id")
-    if hash_builds:
-        crew_heads = crew_heads.hint("shuffle_hash")
-        crew_tails = crew_tails.hint("shuffle_hash")
-    crew_edges = (
-        crew.join(crew_heads, "movie_id", "left_semi")
-        .join(crew_tails, "person_id", "left_semi")
-        .select(
-            F.col("movie_id").alias("head_id"),
-            F.col("person_id").alias("tail_id"),
-            F.col("job"),
-            F.col("rel").alias("rel_type"),
-        )
-        .withColumn("relationship_id", relationship_id("head_id", "tail_id"))
-        .dropDuplicates(["rel_type", "relationship_id"])
-    )
-    out["edges/CREW"] = crew_edges
+    out["edges/CREW"] = edge_table(
+        crew, "movie_id", "person_id", F.col("rel"), payload=["job"]
+    ).dropDuplicates(["rel_type", "relationship_id"])
 
     providers = invert_watch_providers(clean_movies)
     out["nodes/WatchProvider"] = providers.select("provider_id").dropDuplicates(
@@ -270,22 +144,30 @@ def build_movie_graph(
     coll_edges = clean_movies.filter(F.col("collection_id").isNotNull()).select(
         "movie_id", "collection_id"
     )
-    out["nodes/Collection"] = coll_edges.select("collection_id").dropDuplicates(
-        ["collection_id"]
-    )
-    if collections is not None:
+    if collections is None:
+        out["nodes/Collection"] = coll_edges.select("collection_id").dropDuplicates(
+            ["collection_id"]
+        )
+        out["edges/PART_OF"] = edge_table(
+            coll_edges, "movie_id", "collection_id", "PART_OF"
+        )
+    else:
         out["nodes/Collection"] = dedup_by_key(collections, ["collection_id"], "name")
-    out["edges/PART_OF"] = build_edges(
-        coll_edges, movies, out["nodes/Collection"], "movie_id", "collection_id",
-        "PART_OF", broadcast_tails=True,
-    )
+        out["edges/PART_OF"] = build_edges(
+            coll_edges, movies, out["nodes/Collection"], "movie_id", "collection_id",
+            "PART_OF",
+        )
 
     if companies is not None:
         comp_nodes = dedup_by_key(companies, ["company_id"], "name")
         out["nodes/Company"] = comp_nodes
         produced = explode_bridge(clean_movies, "movie_id", "company_ids", "company_id")
-        out["edges/PRODUCED_BY"] = build_edges(
-            produced, movies, comp_nodes, "movie_id", "company_id", "PRODUCED_BY"
+        # the heads come from clean_movies, only the tails from outside
+        out["edges/PRODUCED_BY"] = edge_table(
+            keep_existing(produced, comp_nodes, ["company_id"]),
+            "movie_id",
+            "company_id",
+            "PRODUCED_BY",
         )
         # company -> parent company PART_OF (tail key rename — the
         # reference's tail_map_key quirk, utils/etl.py:158-159)

@@ -20,6 +20,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 
 from movie_etl_spark.operators.upsert import absent_rows, dedup_by_key
+from movie_etl_spark.session import _read_parquet
 
 
 def write_csv(df: DataFrame, path: str, columns: list[str] | None = None) -> None:
@@ -118,9 +119,11 @@ def append_if_absent(
     re-running the same load is a no-op. Returns rows appended.
 
     First write (no table yet) degenerates to a plain deduped write.
+    The existing table's schema comes from one footer read on the Spark
+    driver, so the re-read fires no schema-inference job.
     """
     if os.path.exists(path):
-        existing_keys = spark.read.parquet(path).select(*keys)
+        existing_keys = _read_parquet(spark, path).select(*keys)
         fresh = absent_rows(existing_keys, new, keys, order_col)
     else:
         fresh = dedup_by_key(new, keys, order_col)
@@ -154,7 +157,7 @@ def compact_parquet(
     import math
     import shutil
 
-    df = spark.read.parquet(path)
+    df = _read_parquet(spark, path)
     total = sum(
         os.path.getsize(os.path.join(root, f))
         for root, _, files in os.walk(path)

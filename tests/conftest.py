@@ -30,6 +30,18 @@ def hyp_examples(n: int) -> int:
     return n * HYP_MULT
 
 
+def jobs_in_group(spark, group, thunk):
+    """Run ``thunk`` under job group ``group``; returns its result and
+    the ids of the jobs that carried the group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        result = thunk()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return result, list(sc.statusTracker().getJobIdsForGroup(group))
+
+
 try:  # register the close profile even when unused, so --help shows it
     from hypothesis import settings as _hsettings
 

@@ -40,3 +40,23 @@ def test_bucketed_join_has_no_shuffle(spark, bucketed_pair):
         assert joined.count() == 1000
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+
+
+def test_b1_bucketing_writes_carry_callers_job_group(spark):
+    """q_b1's two concurrent bucketing writes run on threads that
+    inherit the caller's job group: every job the build fires shows up
+    under the group, none without one."""
+    from movie_etl_spark.plans.catalog import q_b1_bucketed_join
+    from tests.conftest import TESTDATA_SF0001, jobs_in_group
+
+    # force the build: drop any tables an earlier sf0.001 run left
+    for t in spark.catalog.listTables():
+        if t.name.startswith("b1_") and "_sf0_001_" in t.name:
+            spark.sql(f"DROP TABLE {t.name}")
+    tracker = spark.sparkContext.statusTracker()
+    ungrouped = set(tracker.getJobIdsForGroup(None))
+    _, jobs = jobs_in_group(
+        spark, "b1-build", lambda: q_b1_bucketed_join(spark, TESTDATA_SF0001)
+    )
+    assert len(jobs) >= 2  # at least one job per bucketing write
+    assert set(tracker.getJobIdsForGroup(None)) == ungrouped

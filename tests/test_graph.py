@@ -8,7 +8,11 @@ the ACTED_IN relationship_id dedup.
 
 from __future__ import annotations
 
+from collections import Counter
+
 import pytest
+from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType
 
 from movie_etl_spark.operators.clean import clean_movie_details
 from movie_etl_spark.operators.upsert import assert_unique
@@ -169,88 +173,136 @@ def test_rollback_movie_cascades_all_tables(graph):
     assert again["edges/ACTED_IN"].count() == rolled["edges/ACTED_IN"].count()
 
 
-def test_shared_node_checkpoint_level_flips_disk_only_past_cap(
-    spark, clean_movies, monkeypatch
-):
-    """ADVICE r14: the size-conditional storage gate in build_movie_graph
-    (r14's g2 sf10 fix) must flip the shared Movie/Person checkpoints to
-    DISK_ONLY past _SHARED_NODES_MEMORY_MAX and keep MEMORY_AND_DISK
-    below it — pinned by spying the level handed to localCheckpoint,
-    since a regression in the gate is invisible below factor-30 scale."""
-    # Spark 4: classic sessions instantiate the CONCRETE subclass in
-    # pyspark.sql.classic.dataframe, whose localCheckpoint overrides the
-    # abstract pyspark.sql.DataFrame one — patch where lookup resolves
-    from pyspark.sql.classic.dataframe import DataFrame
-    from pyspark.storagelevel import StorageLevel
-
-    from movie_etl_spark.plans import graph as graph_mod
-
-    levels: list = []
-    orig = DataFrame.localCheckpoint
-
-    def spy(self, eager=True, storageLevel=None):
-        levels.append(storageLevel)
-        return orig(self, eager=eager, storageLevel=storageLevel)
-
-    monkeypatch.setattr(DataFrame, "localCheckpoint", spy)
-
-    monkeypatch.setattr(graph_mod, "_SHARED_NODES_MEMORY_MAX", 0)
-    build_movie_graph(clean_movies, reuse_shared=True)
-    assert levels == [StorageLevel.DISK_ONLY, StorageLevel.DISK_ONLY]
-
-    levels.clear()
-    monkeypatch.setattr(graph_mod, "_SHARED_NODES_MEMORY_MAX", 2_000_000)
-    build_movie_graph(clean_movies, reuse_shared=True)
-    assert levels == [
-        StorageLevel.MEMORY_AND_DISK,
-        StorageLevel.MEMORY_AND_DISK,
+@pytest.fixture(scope="module")
+def null_keyed_movies(spark, clean_movies):
+    """The two fixture docs plus a doc whose keys are NULL where a
+    bridge can carry them: the movie id itself, one genre element, one
+    cast id and one crew id (the NULL-id doc also heads collection,
+    company, language and country rows)."""
+    docs = [
+        {
+            "id": None,
+            "title": "N",
+            "runtime": 80,
+            "belongs_to_collection": {"id": 7, "name": "C"},
+            "genres": [None, {"id": 28, "name": "Action"}],
+            "spoken_languages": [{"iso_639_1": "fr", "english_name": "French"}],
+            "production_countries": [{"iso_3166_1": "FR", "name": "France"}],
+            "production_companies": [{"id": 1, "name": "Co1"}],
+            "credits": {
+                "cast": [
+                    {"id": None, "name": "Anon", "gender": 0, "character": "X"},
+                    {"id": 9, "name": "P9", "gender": 2, "character": "Cameo"},
+                ],
+                "crew": [
+                    {"id": None, "name": "Anon", "gender": 0, "job": "Director",
+                     "department": "Directing"},
+                    {"id": 5, "name": "P5", "gender": 1, "job": "Writer",
+                     "department": "Writing"},
+                ],
+            },
+        },
+        {
+            "id": 3,
+            "title": "C",
+            "runtime": 70,
+            "genres": [{"id": 28, "name": "Action"}, None],
+            "production_companies": [{"id": 2, "name": "Co2"}, {"id": 99, "name": "?"}],
+            "credits": {
+                "cast": [{"id": None, "name": "Anon", "gender": 0, "character": "Y"}],
+                "crew": [{"id": None, "name": "Anon", "gender": 0, "job": "Editor",
+                          "department": "Editing"}],
+            },
+        },
     ]
-
-
-def test_edge_build_hash_gate_falls_back_to_smj_on_small_heap(
-    spark, clean_movies, monkeypatch
-):
-    """r15 (VERDICT r14 item 5): past _SHARED_NODES_MEMORY_MAX the edge
-    builds keep their non-spillable SHUFFLE_HASH relations only when the
-    JVM heap affords them (measured floor 7 GiB at factor 100); on a
-    smaller heap they must fall back to spillable SortMergeJoin instead
-    of OOMing. Pinned by spying the hash_build_nodes flag handed to
-    build_edges under a forced-big corpus."""
-    from movie_etl_spark.plans import graph as graph_mod
-
-    flags: list = []
-    orig = graph_mod.build_edges
-    real_probe = graph_mod._session_heap_bytes
-
-    def spy(*a, **kw):
-        flags.append(bool(kw.get("hash_build_nodes", False)))
-        return orig(*a, **kw)
-
-    monkeypatch.setattr(graph_mod, "build_edges", spy)
-    monkeypatch.setattr(graph_mod, "_SHARED_NODES_MEMORY_MAX", 0)
-
-    monkeypatch.setattr(graph_mod, "_session_heap_bytes", lambda df: 1)
-    graph_mod.build_movie_graph(clean_movies, reuse_shared=True)
-    assert True not in flags  # every build spills via SMJ
-
-    flags.clear()
-    monkeypatch.setattr(
-        graph_mod, "_session_heap_bytes", lambda df: 64 * 1024**3
+    # the raw schema declares id NOT NULL; a doc read from JSON need not
+    schema = StructType(
+        [StructField(f.name, f.dataType, True) for f in RAW_MOVIE_DETAILS.fields]
     )
-    graph_mod.build_movie_graph(clean_movies, reuse_shared=True)
-    assert True in flags  # ACTED_IN keeps the hash fast path
-
-    # below the cap the heap probe must not even run (small corpora
-    # always hash): a raising probe proves the gate is size-scoped
-    monkeypatch.setattr(graph_mod, "_SHARED_NODES_MEMORY_MAX", 2_000_000)
-    monkeypatch.setattr(
-        graph_mod,
-        "_session_heap_bytes",
-        lambda df: (_ for _ in ()).throw(AssertionError("probed")),
+    raw = spark.createDataFrame(
+        [{f.name: d.get(f.name) for f in schema.fields} for d in docs], schema
     )
-    flags.clear()
-    graph_mod.build_movie_graph(clean_movies, reuse_shared=True)
-    assert True in flags
+    return clean_movies.unionByName(clean_movie_details(raw))
 
-    # and the live probe returns a sane positive byte count
-    assert real_probe(clean_movies) > 0
+
+def _rows(df):
+    return df.columns, Counter(tuple(r) for r in df.collect())
+
+
+def test_bridge_edges_equal_semi_joined_edges(spark, null_keyed_movies):
+    """Every edge table build_movie_graph derives from a bridge of
+    clean_movies (a NULL filter on both keys) equals, as a multiset,
+    what the referential-integrity semi joins of build_edges return over
+    the same node tables."""
+    from movie_etl_spark.functions.cleaning import decode_department
+    from movie_etl_spark.operators.joins import build_edges
+    from movie_etl_spark.operators.reshape import (
+        explode_bridge,
+        explode_cast,
+        explode_crew,
+    )
+    from movie_etl_spark.operators.upsert import dedup_by_key
+
+    clean = null_keyed_movies
+    companies = spark.createDataFrame(
+        [(1, "Co1", None), (2, "Co2", 1)],
+        "company_id INT, name STRING, parent_company_id INT",
+    )
+    g = build_movie_graph(clean, companies=companies)
+    movies, persons = g["nodes/Movie"], g["nodes/Person"]
+
+    def semi_joined(array_col, key, tails, rel):
+        bridge = explode_bridge(clean, "movie_id", array_col, key)
+        return build_edges(bridge, movies, tails, "movie_id", key, rel)
+
+    acted = explode_cast(clean).withColumnRenamed("character", "role")
+    crew = (
+        explode_crew(clean)
+        .withColumn("rel", decode_department("department"))
+        .filter(F.col("rel").isNotNull())
+    )
+    crew_edges = build_edges(
+        crew, movies, persons, "movie_id", "person_id", "-", payload=["job", "rel"]
+    ).select("head_id", "tail_id", "job", F.col("rel").alias("rel_type"),
+             "relationship_id")
+    coll = clean.filter(F.col("collection_id").isNotNull())
+    expected = {
+        "edges/HAS_GENRE": semi_joined(
+            "genre_ids", "genre_id", g["nodes/Genre"], "HAS_GENRE"
+        ),
+        "edges/HAS_LANGUAGE": semi_joined(
+            "language_ids", "language_id", g["nodes/Language"], "HAS_LANGUAGE"
+        ),
+        "edges/PRODUCTION_COUNTRY": semi_joined(
+            "country_ids", "country_id", g["nodes/Country"], "PRODUCTION_COUNTRY"
+        ),
+        "edges/PRODUCED_BY": semi_joined(
+            "company_ids", "company_id", g["nodes/Company"], "PRODUCED_BY"
+        ),
+        "edges/ACTED_IN": dedup_by_key(
+            build_edges(
+                acted, movies, persons, "movie_id", "person_id", "ACTED_IN",
+                payload=["role"],
+            ),
+            ["relationship_id"],
+            order_col="role",
+        ),
+        "edges/CREW": crew_edges.dropDuplicates(["rel_type", "relationship_id"]),
+        "edges/PART_OF": build_edges(
+            coll, movies, g["nodes/Collection"], "movie_id", "collection_id",
+            "PART_OF",
+        ),
+    }
+    for name, want in expected.items():
+        assert _rows(g[name]) == _rows(want), name
+
+    # the fixture really exercises the NULL keys a semi join would drop
+    assert clean.filter(F.col("movie_id").isNull()).count() == 1
+    for bridge, key in (
+        (explode_bridge(clean, "movie_id", "genre_ids", "genre_id"), "genre_id"),
+        (acted, "person_id"),
+        (crew, "person_id"),
+    ):
+        assert bridge.filter(F.col(key).isNull()).count() > 0, key
+    # and company 99, absent from the companies table, still drops
+    assert 99 not in {r["tail_id"] for r in g["edges/PRODUCED_BY"].collect()}

@@ -13,7 +13,7 @@ from movie_etl_spark.session import (
     page_size_bytes,
 )
 
-from tests.conftest import TESTDATA_SF0001
+from tests.conftest import TESTDATA_SF0001, jobs_in_group
 
 MiB = 1 << 20
 
@@ -38,19 +38,9 @@ def test_session_uses_derived_page_size(spark):
     assert env.memoryManager().pageSizeBytes() == expected
 
 
-def _jobs_in_group(spark, group, thunk):
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        result = thunk()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    return result, list(sc.statusTracker().getJobIdsForGroup(group))
-
-
 def test_load_table_runs_no_job_and_matches_inferred_schema(spark, tmp_path):
     for name in TABLE_NAMES:
-        _, jobs = _jobs_in_group(
+        _, jobs = jobs_in_group(
             spark, f"load-{name}", lambda: load_table(spark, TESTDATA_SF0001, name)
         )
         assert jobs == [], name
@@ -59,7 +49,7 @@ def test_load_table_runs_no_job_and_matches_inferred_schema(spark, tmp_path):
 
     # inference itself fires a job, so the group check above can fail
     sf_orders = os.path.join(TESTDATA_SF0001, "orders.parquet")
-    _, jobs = _jobs_in_group(spark, "infer", lambda: spark.read.parquet(sf_orders))
+    _, jobs = jobs_in_group(spark, "infer", lambda: spark.read.parquet(sf_orders))
     assert jobs
 
     # a Spark-written directory: part files plus _SUCCESS and .crc files
@@ -67,7 +57,7 @@ def test_load_table_runs_no_job_and_matches_inferred_schema(spark, tmp_path):
     spark.range(50).selectExpr(
         "id", "cast(id as string) AS s", "array(id) AS a", "timestamp_seconds(id) AS t"
     ).repartition(3).write.parquet(out)
-    df, jobs = _jobs_in_group(spark, "load-dir", lambda: _read_parquet(spark, out))
+    df, jobs = jobs_in_group(spark, "load-dir", lambda: _read_parquet(spark, out))
     assert jobs == []
     assert df.schema == spark.read.parquet(out).schema
     assert df.count() == 50
@@ -86,7 +76,7 @@ def test_load_table_reads_nanos_events_without_session_conf(spark, tmp_path):
     # before it reads the footer, or the INT64 nanos column is illegal
     spark.conf.unset(conf)
     try:
-        df, jobs = _jobs_in_group(
+        df, jobs = jobs_in_group(
             spark, "load-events", lambda: load_table(spark, str(tmp_path), "events")
         )
         assert jobs == []

@@ -76,6 +76,43 @@ def test_append_if_absent_idempotent(spark, tmp_path):
         assert spark.read.parquet(target).count() == n
 
 
+def test_sinks_read_existing_table_without_inference_job(spark, tmp_path, monkeypatch):
+    """append_if_absent and compact_parquet read the existing table's
+    schema from a footer on the Spark driver: one job fewer than letting Spark
+    infer it."""
+    from movie_etl_spark.sources import sinks
+    from tests.conftest import jobs_in_group
+
+    def infer(s, p):
+        return s.read.parquet(p)
+
+    readers = (sinks._read_parquet, infer)
+
+    df = spark.range(30_000).selectExpr("id AS k", "cast(id AS string) AS v")
+    path = str(tmp_path / "reappend")
+    assert append_if_absent(spark, df, path, ["k"]) == 30_000
+    counts = []
+    for reader in readers:
+        monkeypatch.setattr(sinks, "_read_parquet", reader)
+        n, jobs = jobs_in_group(
+            spark, f"reappend-{len(counts)}", lambda: append_if_absent(spark, df, path, ["k"])
+        )
+        assert n == 0
+        counts.append(len(jobs))
+    assert counts[0] == counts[1] - 1, counts
+
+    counts = []
+    for reader in readers:
+        monkeypatch.setattr(sinks, "_read_parquet", reader)
+        frag = str(tmp_path / f"frag-{len(counts)}")
+        spark.range(0, 1600).repartition(4).write.parquet(frag)
+        _, jobs = jobs_in_group(
+            spark, f"compact-{len(counts)}", lambda: sinks.compact_parquet(spark, frag)
+        )
+        counts.append(len(jobs))
+    assert counts[0] == counts[1] - 1, counts
+
+
 def test_write_jdbc_if_absent_idempotent(spark, tmp_path):
     """K1/K2 over JDBC, round-tripped against the embedded Derby driver
     that ships with Spark — same idempotency matrix as the parquet
