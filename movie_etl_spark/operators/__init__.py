@@ -69,7 +69,6 @@ from movie_etl_spark.operators.multimodal import (  # noqa: F401
     decode_image,
     decode_images,
     extract_features,
-    pixel_features,
     sample_frames,
 )
 from movie_etl_spark.operators.graph_algos import (  # noqa: F401

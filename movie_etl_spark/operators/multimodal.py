@@ -1,28 +1,25 @@
-"""Multimodal column plumbing: image/audio/video as opaque binary
-columns with typed metadata (engine extension for LLM data pipelines).
+"""Multimodal columns: image and audio payloads as binary columns,
+decoded per row in an Arrow-batched ``mapInPandas`` stage into typed
+columns.
 
-Decode has a REAL path and an honest stub, split by codec class:
+The codecs cover exactly what the catalog's mm queries produce, in pure
+Python + numpy + stdlib ``zlib``:
 
-- ``decode_image`` genuinely parses the formats a stdlib+numpy
-  environment can handle — PPM (P6), PGM (P5), 24-bit uncompressed
-  BMP, PNG in all spec bit depths/layouts this module targets (8- and
-  16-bit gray/GA/RGB/RGBA, palette 1/2/4/8 incl. tRNS alpha, Adam7
-  interlace for all of those; stdlib ``zlib`` inflates IDAT),
-  GIF87a/89a incl. 4-pass interlace (pure-Python variable-width LZW,
-  in this module), and baseline + progressive + 2x2/2x1-subsampled
-  JPEG (``operators.jpeg``: numpy 8x8 DCT + canonical Huffman, tables
-  read from the payload's own DQT/DHT) — into H×W×C pixel arrays
-  (uint8; uint16 for 16-bit PNG).
-- The REMAINING codec variants (arithmetic-coded / 12-bit /
-  hierarchical JPEG, MP3's MDCT psychoacoustics, video containers)
-  raise NotImplementedError, and ``extract_features``'s ``fake``
-  fallback derives a deterministic md5 pseudo-feature instead so the
-  Spark-side plumbing stays testable end-to-end.
+- images (:func:`decode_image`): binary PPM (P6) and PGM (P5); PNG at
+  bit depth 8 for gray, gray+alpha, RGB and RGBA (all five scanline
+  filters), and palette PNG at bit depth 1/2/4/8; GIF with full
+  variable-width LZW (table growth and the 4096-code reset); baseline
+  grayscale JPEG (``operators.jpeg``). Every decode is H×W×C uint8.
+- audio (:func:`decode_audio`): RIFF/WAV with 16-bit PCM or G.711
+  mu-law samples, skipping unknown chunks.
 
-Everything runs through ``mapInPandas`` so payload bytes move
-driver-free through Arrow record batches; at 100 TB the pattern is:
-binary parquet columns in, bounded-size Arrow batches through a
-vectorized Python stage, typed feature columns out.
+A known variant outside that set (Adam7, 16-bit, low-bit gray or tRNS
+PNG; GIF extension blocks or interlace; A-law or 8-bit PCM WAV; the
+JPEG variants ``operators.jpeg`` names) raises ``NotImplementedError``,
+and unknown or malformed bytes raise ``ValueError``: no variant decodes
+to wrong pixels. ``extract_features`` (mm1) decodes nothing; it emits an
+md5 pseudo-feature. Video frame extraction is a stub: ``sample_frames``
+builds only the row fan-out.
 """
 
 from __future__ import annotations
@@ -30,7 +27,8 @@ from __future__ import annotations
 import hashlib
 import re
 import struct
-from collections.abc import Iterator
+import zlib
+from collections.abc import Callable, Iterator
 
 import numpy as np
 import pandas as pd
@@ -48,6 +46,27 @@ from pyspark.sql.types import (
     StructType,
 )
 
+
+def _map_rows(
+    df: DataFrame, schema: StructType, row_fn: Callable, cols: tuple[str, ...]
+) -> DataFrame:
+    """One ``mapInPandas`` stage: ``row_fn(*values)`` per row of ``cols``
+    returns the fields that follow ``asset_id`` in ``schema``. Binary
+    values arrive as ``bytes`` (``None`` for NULL), so a NULL payload
+    reaches the decoders' own "empty or truncated" error."""
+    names = schema.fieldNames()
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            rows = [
+                (aid, *row_fn(*vals))
+                for aid, *vals in zip(pdf["asset_id"], *(pdf[c] for c in cols))
+            ]
+            yield pd.DataFrame(rows, columns=names)
+
+    return df.mapInPandas(run, schema)
+
+
 IMAGE_FEATURES_SCHEMA = StructType(
     [
         StructField("asset_id", LongType()),
@@ -60,38 +79,17 @@ IMAGE_FEATURES_SCHEMA = StructType(
 
 
 def decode_image(payload: bytes) -> np.ndarray:
-    """Real image decode for stdlib-parseable formats.
+    """Decode PPM (P6), PGM (P5), 8-bit or palette PNG, GIF, or baseline
+    grayscale JPEG to an H×W×C uint8 array (C=1 for PGM and JPEG).
 
-    Supports PPM binary (P6), PGM binary (P5), 24-bit uncompressed
-    (BI_RGB) BMP, PNG (8/16-bit gray / gray+alpha / RGB / RGBA,
-    palette at bit depth 1/2/4/8 incl. tRNS alpha, sequential AND
-    Adam7-interlaced for all of those — stdlib ``zlib`` inflates
-    IDAT), GIF87a/89a incl. 4-pass interlace (pure-Python LZW,
-    operators/jpeg-style spec implementation in this module), and
-    JPEG: baseline sequential SOF0, progressive SOF2, and 2x2/2x1
-    chroma subsampling (operators.jpeg: pure numpy DCT + Huffman).
-
-    Returns an H×W×C array (C=1 for PGM/gray JPEG): uint8 for every
-    format EXCEPT 16-bit PNG, which keeps its native uint16 range
-    0-65535 (downscaling to uint8 would silently destroy 8 bits of
-    signal). Downstream consumers (``decode_images`` stats,
-    ``perceptual_hash``) are exact-integer and range-relative — mean
-    comparisons and gradient signs, never absolute 0-255 thresholds —
-    so both dtypes flow through them correctly (pinned by
-    test_multimodal.test_sixteen_bit_png_through_stats_and_phash).
-
-    Raises ``NotImplementedError`` only for the genuinely
-    unimplemented codec variants (arithmetic-coded / 12-bit /
-    hierarchical JPEG, MP3, video) and ``ValueError`` for
-    malformed/unknown bytes.
-    """
+    Raises ``NotImplementedError`` for a known but unsupported variant
+    (see the module doc) and ``ValueError`` for malformed or unknown
+    bytes."""
     if payload is None or len(payload) < 2:
         raise ValueError("empty or truncated payload")
     magic = payload[:2]
     if magic in (b"P6", b"P5"):
         return _decode_pnm(payload)
-    if magic == b"BM":
-        return _decode_bmp24(payload)
     if payload[:8] == b"\x89PNG\r\n\x1a\n":
         return _decode_png(payload)
     if payload[:6] in (b"GIF87a", b"GIF89a"):
@@ -118,9 +116,8 @@ def _decode_pnm(payload: bytes) -> np.ndarray:
         pos += m.end()
     width, height, maxval = tokens
     if width <= 0 or height <= 0 or maxval < 1:
-        # zero-dim headers would yield an empty array and crash the
-        # downstream stats reduction with an undiagnosable error (r6
-        # advice): fail with the documented error class instead
+        # a zero-dim header would yield an empty array and crash the
+        # stats reduction downstream with an undiagnosable error
         raise ValueError(
             f"invalid netpbm dimensions {width}x{height} maxval={maxval}"
         )
@@ -134,59 +131,22 @@ def _decode_pnm(payload: bytes) -> np.ndarray:
     return np.frombuffer(data, dtype=np.uint8).reshape(height, width, channels)
 
 
-def _decode_bmp24(payload: bytes) -> np.ndarray:
-    """24-bit uncompressed (BI_RGB) BMP: little-endian headers, 4-byte
-    padded bottom-up BGR rows -> top-down RGB array."""
-    if len(payload) < 54:
-        raise ValueError("truncated BMP header")
-    pixel_off = struct.unpack_from("<I", payload, 10)[0]
-    width, height = struct.unpack_from("<ii", payload, 18)
-    bpp = struct.unpack_from("<H", payload, 28)[0]
-    compression = struct.unpack_from("<I", payload, 30)[0]
-    if bpp != 24 or compression != 0:
-        raise NotImplementedError(
-            f"only 24-bit BI_RGB BMP supported (got {bpp}bpp, "
-            f"compression={compression})"
-        )
-    bottom_up = height > 0
-    height = abs(height)
-    if width <= 0 or height == 0:
-        raise ValueError(f"invalid BMP dimensions {width}x{height}")
-    row_bytes = (width * 3 + 3) & ~3
-    need = pixel_off + row_bytes * height
-    if len(payload) < need:
-        raise ValueError("truncated BMP pixel data")
-    rows = np.frombuffer(
-        payload, dtype=np.uint8, count=row_bytes * height, offset=pixel_off
-    ).reshape(height, row_bytes)[:, : width * 3]
-    img = rows.reshape(height, width, 3)[:, :, ::-1]  # BGR -> RGB
-    return img[::-1] if bottom_up else img
-
-
-# PNG color_type -> samples per pixel (8-bit, non-palette)
+# PNG color_type -> samples per pixel (non-palette)
 _PNG_CHANNELS = {0: 1, 2: 3, 4: 2, 6: 4}
 
 
-# Adam7 interlace pass grid: (x0, y0, dx, dy) per pass
-_ADAM7 = (
-    (0, 0, 8, 8), (4, 0, 8, 8), (0, 4, 4, 8), (2, 0, 4, 4),
-    (0, 2, 2, 4), (1, 0, 2, 2), (0, 1, 1, 2),
-)
-
-
-def _png_unfilter(raw: bytes, pos: int, height: int, stride: int, bpp: int) -> tuple[np.ndarray, int]:
-    """Unfilter ``height`` scanlines of ``stride`` bytes starting at
-    ``raw[pos]`` (each prefixed by its filter-type byte, RFC 2083 §6);
-    returns the [height, stride] byte grid and the next offset."""
+def _png_unfilter(raw: bytes, height: int, stride: int, bpp: int) -> np.ndarray:
+    """Unfilter ``height`` scanlines of ``stride`` bytes (each prefixed
+    by its filter-type byte, RFC 2083 §6) into a [height, stride] byte
+    grid; ``raw`` must hold exactly those scanlines."""
+    if len(raw) != height * (stride + 1):
+        raise ValueError("PNG pixel data length mismatch")
     out = np.empty((height, stride), dtype=np.uint8)
     prev = np.zeros(stride, dtype=np.uint8)
+    pos = 0
     for y in range(height):
-        if pos >= len(raw):
-            raise ValueError("PNG pixel data length mismatch")
         ftype = raw[pos]
         line = bytearray(raw[pos + 1 : pos + 1 + stride])
-        if len(line) < stride:
-            raise ValueError("PNG pixel data length mismatch")
         pos += 1 + stride
         if ftype == 0:
             pass
@@ -212,7 +172,7 @@ def _png_unfilter(raw: bytes, pos: int, height: int, stride: int, bpp: int) -> t
         else:
             raise ValueError(f"invalid PNG filter type {ftype}")
         out[y] = prev = np.frombuffer(bytes(line), dtype=np.uint8)
-    return out, pos
+    return out
 
 
 def _unpack_bits(rows: np.ndarray, width: int, depth: int) -> np.ndarray:
@@ -227,94 +187,17 @@ def _unpack_bits(rows: np.ndarray, width: int, depth: int) -> np.ndarray:
     return out[:, :width]
 
 
-def _png_index_grid(
-    raw: bytes, width: int, height: int, bit_depth: int, interlace: int
-) -> np.ndarray:
-    """Unfilter + bit-unpack a single-channel sub-byte/8-bit PNG image
-    (palette indices or low-bit grayscale) to an [H,W] uint8 grid,
-    sequential or Adam7 (bit packing restarts every scanline of every
-    pass)."""
-
-    def unpack(rows: np.ndarray, w: int) -> np.ndarray:
-        return (
-            rows[:, :w] if bit_depth == 8 else _unpack_bits(rows, w, bit_depth)
-        )
-
-    if interlace == 0:
-        stride = (width * bit_depth + 7) // 8
-        rows, end = _png_unfilter(raw, 0, height, stride, 1)
-        if end != len(raw):
-            raise ValueError("PNG pixel data length mismatch")
-        return unpack(rows, width)
-    idx = np.zeros((height, width), dtype=np.uint8)
-    pos = 0
-    for x0, y0, dx, dy in _ADAM7:
-        pw = (width - x0 + dx - 1) // dx
-        ph = (height - y0 + dy - 1) // dy
-        if pw <= 0 or ph <= 0:
-            continue
-        stride = (pw * bit_depth + 7) // 8
-        rows, pos = _png_unfilter(raw, pos, ph, stride, 1)
-        idx[y0::dy, x0::dx] = unpack(rows, pw)
-    if pos != len(raw):
-        raise ValueError("PNG pixel data length mismatch")
-    return idx
-
-
-def _png_colorkey_alpha(
-    img: np.ndarray, trns: bytes, color_type: int, bit_depth: int
-) -> np.ndarray:
-    """tRNS on gray (color type 0) / truecolor (2): the chunk holds ONE
-    sample value (2-byte big-endian fields, in the image's ORIGINAL bit
-    depth scale); pixels equal to it decode fully transparent, all
-    others opaque. Appends the alpha channel in the array's dtype
-    (uint8 → 255 opaque, uint16 → 65535)."""
-    if color_type == 0:
-        # the spec mandates EXACTLY 2 (gray) / 6 (truecolor) bytes; an
-        # oversized chunk is malformed, same as undersized (r9 ADVICE —
-        # the prefix-slice silently accepted trailing garbage)
-        if len(trns) != 2:
-            raise ValueError("malformed gray tRNS chunk")
-        (key,) = struct.unpack(">H", trns)
-        if bit_depth < 8:
-            # low-bit gray was scaled to 0..255 on decode — scale the
-            # key the same way (255/(2^d-1) is exact)
-            key *= 255 // ((1 << bit_depth) - 1)
-        mask = img[:, :, 0] == key
-    else:
-        if len(trns) != 6:
-            raise ValueError("malformed truecolor tRNS chunk")
-        r, g, b = struct.unpack(">HHH", trns)
-        mask = (
-            (img[:, :, 0] == r) & (img[:, :, 1] == g) & (img[:, :, 2] == b)
-        )
-    opaque = 255 if img.dtype == np.uint8 else 65535
-    alpha = np.where(mask, 0, opaque).astype(img.dtype)
-    return np.concatenate([img, alpha[:, :, None]], axis=2)
-
-
 def _decode_png(payload: bytes) -> np.ndarray:
     """PNG via stdlib ``zlib``: signature + CRC-verified chunk walk,
     IHDR validation, concatenated-IDAT inflate, per-scanline unfilter
-    (types 0-4: None/Sub/Up/Average/Paeth). Supports 8-bit and 16-bit
-    gray / gray+alpha / RGB / RGBA (16-bit returns uint16 — see
-    ``decode_image``'s contract), PALETTE images at bit depth 1/2/4/8
-    (PLTE lookup -> RGB, tRNS -> per-entry alpha), tRNS COLORKEY
-    transparency on gray/truecolor images (single-sample chunk ->
-    matching pixels decode alpha 0, appended in the image's dtype),
-    and Adam7 INTERLACE for every one of those layouts (7-pass
-    deinterlace with per-pass filter state; sub-byte bit packing and
-    2-byte samples both restart per pass scanline). No remaining
-    NotImplementedError combinations — unknown color types / bit
-    depths outside the spec grid raise with the offending values."""
-    import zlib
-
+    (types 0-4: None/Sub/Up/Average/Paeth). One sequential path for
+    8-bit gray / gray+alpha / RGB / RGBA and for palette indices at bit
+    depth 1/2/4/8 (PLTE lookup -> RGB)."""
     if len(payload) < 8 or payload[:8] != b"\x89PNG\r\n\x1a\n":
         raise ValueError("not a PNG payload")
     ihdr = None
     idat = bytearray()
     plte = None
-    trns = None
     pos = 8
     seen_iend = False
     while pos + 8 <= len(payload):
@@ -335,7 +218,7 @@ def _decode_png(payload: bytes) -> np.ndarray:
                 raise ValueError("malformed PLTE chunk")
             plte = np.frombuffer(body, dtype=np.uint8).reshape(-1, 3)
         elif ctype == b"tRNS":
-            trns = body
+            raise NotImplementedError("PNG tRNS transparency not supported")
         elif ctype == b"IEND":
             seen_iend = True
             break
@@ -347,17 +230,10 @@ def _decode_png(payload: bytes) -> np.ndarray:
         raise ValueError(f"invalid PNG dimensions {width}x{height}")
     if comp != 0 or filt != 0:
         raise ValueError("unknown PNG compression/filter method")
-    raw = zlib.decompress(bytes(idat))
-    if interlace not in (0, 1):
+    if interlace == 1:
+        raise NotImplementedError("Adam7-interlaced PNG not supported")
+    if interlace != 0:
         raise ValueError(f"unknown PNG interlace method {interlace}")
-
-    def _finish(img: np.ndarray) -> np.ndarray:
-        # colorkey transparency for gray/truecolor (the palette path
-        # applies its own per-entry tRNS table below)
-        if trns is not None and color_type in (0, 2):
-            return _png_colorkey_alpha(img, trns, color_type, bit_depth)
-        return img
-
     if color_type == 3:
         if plte is None:
             raise ValueError("palette PNG without a PLTE chunk")
@@ -365,94 +241,60 @@ def _decode_png(payload: bytes) -> np.ndarray:
             raise ValueError(
                 f"palette PNG bit depth {bit_depth} outside the spec set"
             )
-        idx = _png_index_grid(raw, width, height, bit_depth, interlace)
-        if int(idx.max(initial=0)) >= plte.shape[0]:
-            raise ValueError("palette index outside PLTE")
-        rgb = plte[idx.astype(np.int64)]
-        if trns is not None:
-            # tRNS: per-palette-entry alpha, short tables pad opaque
-            alpha = np.full(plte.shape[0], 255, dtype=np.uint8)
-            alpha[: len(trns)] = np.frombuffer(trns, dtype=np.uint8)
-            return np.concatenate(
-                [rgb, alpha[idx.astype(np.int64)][:, :, None]], axis=2
-            )
-        return rgb
-    if bit_depth == 16 and color_type in _PNG_CHANNELS:
-        channels = _PNG_CHANNELS[color_type]
-        if interlace == 0:
-            stride = width * channels * 2
-            rows, end = _png_unfilter(raw, 0, height, stride, channels * 2)
-            if end != len(raw):
-                raise ValueError("PNG pixel data length mismatch")
-            return _finish(
-                np.frombuffer(rows.tobytes(), dtype=">u2")
-                .reshape(height, width, channels)
-                .astype(np.uint16)
-            )
-        # Adam7 16-bit: filters operate on the byte stream with
-        # bpp = channels*2 per pass; samples stay big-endian pairs
-        out16 = np.zeros((height, width, channels), dtype=np.uint16)
-        pos2 = 0
-        for x0, y0, dx, dy in _ADAM7:
-            pw = (width - x0 + dx - 1) // dx
-            ph = (height - y0 + dy - 1) // dy
-            if pw <= 0 or ph <= 0:
-                continue
-            rows, pos2 = _png_unfilter(
-                raw, pos2, ph, pw * channels * 2, channels * 2
-            )
-            out16[y0::dy, x0::dx, :] = (
-                np.frombuffer(rows.tobytes(), dtype=">u2")
-                .reshape(ph, pw, channels)
-                .astype(np.uint16)
-            )
-        if pos2 != len(raw):
-            raise ValueError("PNG pixel data length mismatch")
-        return _finish(out16)
-    if color_type == 0 and bit_depth in (1, 2, 4):
-        # low-bit grayscale: same sub-byte grid as palette, then the
-        # spec's sample scaling (255/(2^d-1) is an exact integer)
-        scale = 255 // ((1 << bit_depth) - 1)
-        idx = _png_index_grid(raw, width, height, bit_depth, interlace)
-        return _finish(
-            (idx.astype(np.uint16) * scale).astype(np.uint8)[:, :, None]
+        channels = 1
+    elif (bit_depth == 16 and color_type in _PNG_CHANNELS) or (
+        color_type == 0 and bit_depth in (1, 2, 4)
+    ):
+        raise NotImplementedError(
+            f"{bit_depth}-bit PNG (color_type={color_type}) not supported"
         )
-    if bit_depth != 8 or color_type not in _PNG_CHANNELS:
-        # the full legal PNG grid is covered above; anything else is a
-        # malformed (depth, color type) combination per the spec table
+    elif bit_depth != 8 or color_type not in _PNG_CHANNELS:
         raise ValueError(
             f"invalid PNG bit_depth={bit_depth} / color_type={color_type} "
             f"combination"
         )
-    channels = _PNG_CHANNELS[color_type]
-    if interlace == 0:
-        stride = width * channels
-        out, end = _png_unfilter(raw, 0, height, stride, channels)
-        if end != len(raw):
-            raise ValueError("PNG pixel data length mismatch")
-        return _finish(out.reshape(height, width, channels))
-    # Adam7: seven independently filtered sub-images, concatenated in
-    # one zlib stream; scatter each pass back onto its grid
-    out = np.zeros((height, width, channels), dtype=np.uint8)
-    pos = 0
-    for x0, y0, dx, dy in _ADAM7:
-        pw = (width - x0 + dx - 1) // dx
-        ph = (height - y0 + dy - 1) // dy
-        if pw <= 0 or ph <= 0:
-            continue
-        rows, pos = _png_unfilter(raw, pos, ph, pw * channels, channels)
-        out[y0::dy, x0::dx, :] = rows.reshape(ph, pw, channels)
-    if pos != len(raw):
-        raise ValueError("PNG pixel data length mismatch")
-    return _finish(out)
+    else:
+        channels = _PNG_CHANNELS[color_type]
+    try:
+        raw = zlib.decompress(bytes(idat))
+    except zlib.error as e:
+        raise ValueError(f"corrupt PNG IDAT stream: {e}") from None
+    rows = _png_unfilter(
+        raw,
+        height,
+        (width * channels * bit_depth + 7) // 8,
+        max(1, channels * bit_depth // 8),
+    )
+    if color_type != 3:
+        return rows.reshape(height, width, channels)
+    idx = rows[:, :width] if bit_depth == 8 else _unpack_bits(rows, width, bit_depth)
+    if int(idx.max(initial=0)) >= plte.shape[0]:
+        raise ValueError("palette index outside PLTE")
+    return plte[idx.astype(np.int64)]
+
+
+def _png_chunk(ctype: bytes, body: bytes) -> bytes:
+    return (
+        struct.pack(">I", len(body)) + ctype + body
+        + struct.pack(">I", zlib.crc32(ctype + body) & 0xFFFFFFFF)
+    )
+
+
+def _png_file(ihdr: bytes, scanlines: bytes, plte: bytes) -> bytes:
+    return (
+        b"\x89PNG\r\n\x1a\n"
+        + _png_chunk(b"IHDR", ihdr)
+        + (_png_chunk(b"PLTE", plte) if plte else b"")
+        + _png_chunk(b"IDAT", zlib.compress(scanlines, 6))
+        + _png_chunk(b"IEND", b"")
+    )
 
 
 def _filter_scanline(
     line: np.ndarray, prev: np.ndarray, bpp: int, filter_type: int
 ) -> bytes:
     """Apply one PNG filter (0-4) to an int32 byte scanline given the
-    previous UNFILTERED scanline — shared by the sequential and Adam7
-    encoders (filters are defined on bytes regardless of depth)."""
+    previous UNFILTERED scanline."""
     shifted = np.concatenate([np.zeros(bpp, dtype=np.int32), line[:-bpp]])
     if filter_type == 0:
         enc = line
@@ -481,55 +323,26 @@ def _filter_scanline(
     return (enc & 0xFF).astype(np.uint8).tobytes()
 
 
-def encode_png(arr: np.ndarray, filter_type: int = 0) -> bytes:  # noqa: C901
+def encode_png(arr: np.ndarray, filter_type: int = 0) -> bytes:
     """Minimal deterministic PNG encoder (asset synthesis + round-trip
     tests): 8-bit gray/GA/RGB/RGBA, non-interlaced, every scanline
     filtered with the SAME ``filter_type`` (0-4) so tests can exercise
     each unfilter path of :func:`_decode_png` in isolation."""
-    import zlib
-
+    if arr.dtype != np.uint8:
+        raise ValueError(f"encode_png writes 8-bit samples, got {arr.dtype}")
     if arr.ndim == 2:
         arr = arr[:, :, None]
     height, width, channels = arr.shape
     color_type = {1: 0, 2: 4, 3: 2, 4: 6}[channels]
-    depth = 16 if arr.dtype == np.uint16 else 8
-    # filtering operates on BYTES: 16-bit samples become big-endian
-    # byte pairs and bpp doubles (RFC 2083 §6 defines filters on the
-    # byte stream regardless of depth)
-    if depth == 16:
-        arr = arr.astype(">u2")
-        bpp = channels * 2
-    else:
-        arr = arr.astype(np.uint8)
-        bpp = channels
-    stride = width * bpp
-    prev = np.zeros(stride, dtype=np.int32)
+    prev = np.zeros(width * channels, dtype=np.int32)
     filtered = bytearray()
     for y in range(height):
-        line = np.frombuffer(arr[y].tobytes(), dtype=np.uint8).astype(
-            np.int32
-        )
+        line = arr[y].reshape(-1).astype(np.int32)
         filtered.append(filter_type)
-        filtered += _filter_scanline(line, prev, bpp, filter_type)
+        filtered += _filter_scanline(line, prev, channels, filter_type)
         prev = line
-
-    def chunk(ctype: bytes, body: bytes) -> bytes:
-        return (
-            struct.pack(">I", len(body))
-            + ctype
-            + body
-            + struct.pack(">I", zlib.crc32(ctype + body) & 0xFFFFFFFF)
-        )
-
-    ihdr = struct.pack(
-        ">IIBBBBB", width, height, depth, color_type, 0, 0, 0
-    )
-    return (
-        b"\x89PNG\r\n\x1a\n"
-        + chunk(b"IHDR", ihdr)
-        + chunk(b"IDAT", zlib.compress(bytes(filtered), 6))
-        + chunk(b"IEND", b"")
-    )
+    ihdr = struct.pack(">IIBBBBB", width, height, 8, color_type, 0, 0, 0)
+    return _png_file(ihdr, bytes(filtered), b"")
 
 
 def png_encoder_udf(height: int, width: int, channels: int):
@@ -555,38 +368,29 @@ def png_encoder_udf(height: int, width: int, channels: int):
     return to_png
 
 
-def _g711_tables() -> tuple[np.ndarray, np.ndarray]:
-    """(mu-law, A-law) byte -> linear 16-bit expansion tables, the
-    classic CCITT G.711 formulas (public reference implementations)."""
+def _ulaw_table() -> np.ndarray:
+    """mu-law byte -> linear 16-bit expansion table, the classic CCITT
+    G.711 formula (public reference implementations)."""
     ulaw = np.zeros(256, dtype=np.int32)
-    alaw = np.zeros(256, dtype=np.int32)
     for b in range(256):
         u = ~b & 0xFF
         mant = u & 0x0F
         t = (((mant << 3) + 0x84) << ((u >> 4) & 7)) - 0x84
         ulaw[b] = -t if u & 0x80 else t
-        a = b ^ 0x55
-        exp = (a & 0x70) >> 4
-        t = (a & 0x0F) << 4 | 8
-        if exp:
-            t = (t + 0x100) << (exp - 1)
-        alaw[b] = t if a & 0x80 else -t
-    return ulaw, alaw
+    return ulaw
 
 
-_ULAW_TABLE, _ALAW_TABLE = _g711_tables()
+_ULAW_TABLE = _ulaw_table()
 
 
 def decode_audio(payload: bytes) -> tuple[np.ndarray, int]:
-    """Real audio decode for RIFF/WAV PCM — the format a stdlib-only
-    environment can genuinely parse (compressed audio needs external
-    codecs and raises NotImplementedError).
+    """RIFF/WAV decode for 16-bit signed LE PCM (format tag 1) and 8-bit
+    G.711 mu-law (tag 7).
 
     Chunk-walking parser: tolerates extra chunks (LIST/fact/...) and
-    odd-size padding. Supports 16-bit signed LE and 8-bit unsigned PCM.
-    Returns ``(frames, sample_rate)`` where ``frames`` is an
-    [n_frames, n_channels] int32 array of raw sample values (16-bit:
-    -32768..32767; 8-bit: 0..255 as stored).
+    odd-size padding. Returns ``(frames, sample_rate)`` where ``frames``
+    is an [n_frames, n_channels] int32 array of linear 16-bit samples.
+    Other format tags and PCM widths raise ``NotImplementedError``.
     """
     if payload is None or len(payload) < 12:
         raise ValueError("empty or truncated payload")
@@ -611,29 +415,21 @@ def decode_audio(payload: bytes) -> tuple[np.ndarray, int]:
     if fmt is None or data is None:
         raise ValueError("missing fmt or data chunk")
     audio_format, channels, rate, _byte_rate, _block_align, bits = fmt
-    if audio_format not in (1, 6, 7):
+    if audio_format not in (1, 7):
         raise NotImplementedError(
             f"compressed WAV (format tag {audio_format}) requires an "
-            "external codec — PCM (1), A-law (6), and mu-law (7) "
-            "supported"
+            "external codec — PCM (1) and mu-law (7) supported"
         )
-    if audio_format in (6, 7):
+    if audio_format == 7:
         # G.711 companded telephony audio: 8-bit log-coded samples
-        # expanded to linear 16-bit via the classic CCITT tables
-        # (cross-checked bit-exactly against stdlib audioop for all
-        # 256 code points — test_multimodal)
+        # expanded to linear 16-bit via the classic CCITT table
         if bits != 8:
             raise ValueError(f"G.711 WAV must be 8-bit, got {bits}")
-        table = _ALAW_TABLE if audio_format == 6 else _ULAW_TABLE
-        samples = table[np.frombuffer(data, dtype=np.uint8)].astype(
-            np.int32
-        )
+        samples = _ULAW_TABLE[np.frombuffer(data, dtype=np.uint8)]
     elif bits == 16:
         samples = np.frombuffer(
             data[: len(data) - (len(data) % 2)], dtype="<i2"
         ).astype(np.int32)
-    elif bits == 8:
-        samples = np.frombuffer(data, dtype=np.uint8).astype(np.int32)
     else:
         raise NotImplementedError(f"{bits}-bit PCM not supported")
     if channels < 1:
@@ -656,107 +452,49 @@ DECODED_AUDIO_SCHEMA = StructType(
 )
 
 
+def _audio_stats(payload: bytes | None) -> tuple:
+    frames, rate = decode_audio(payload)
+    return (
+        rate,
+        frames.shape[1],
+        frames.shape[0],
+        frames.shape[0] * 1000.0 / rate,
+        int(frames.sum(dtype=np.int64)),
+        int(frames.min()),
+        int(frames.max()),
+    )
+
+
 def decode_audio_stats(assets: DataFrame) -> DataFrame:
     """REAL WAV decode to typed columns — strict, no fake fallback.
     Integer sample stats are exact (hash-stable across engines);
-    duration is frames/rate. Same Arrow/mapInPandas 100 TB shape as
-    :func:`decode_images`."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in (
-                "asset_id", "sample_rate", "n_channels", "n_frames",
-                "duration_ms", "sample_sum", "sample_min", "sample_max",
-            )}
-            for aid, b in zip(pdf["asset_id"], pdf["payload"]):
-                frames, rate = decode_audio(
-                    bytes(b) if b is not None else None
-                )
-                out["asset_id"].append(aid)
-                out["sample_rate"].append(rate)
-                out["n_channels"].append(frames.shape[1])
-                out["n_frames"].append(frames.shape[0])
-                out["duration_ms"].append(frames.shape[0] * 1000.0 / rate)
-                out["sample_sum"].append(int(frames.sum(dtype=np.int64)))
-                out["sample_min"].append(int(frames.min()))
-                out["sample_max"].append(int(frames.max()))
-            yield pd.DataFrame(out)
-
+    duration is frames/rate."""
     from movie_etl_spark.session import ensure_parallelism
 
-    return ensure_parallelism(assets).mapInPandas(run, schema=DECODED_AUDIO_SCHEMA)
+    return _map_rows(
+        ensure_parallelism(assets), DECODED_AUDIO_SCHEMA, _audio_stats,
+        ("payload",),
+    )
 
 
-def pixel_features(arr: np.ndarray) -> list[float]:
-    """8-dim feature from decoded pixels: shape + intensity stats.
-    [height, width, channels, mean, std, min, max, channel0_mean]"""
-    flat = arr.astype(np.float64)
-    return [
-        float(arr.shape[0]),
-        float(arr.shape[1]),
-        float(arr.shape[2]),
-        float(flat.mean()),
-        float(flat.std()),
-        float(flat.min()),
-        float(flat.max()),
-        float(flat[:, :, 0].mean()),
-    ]
+def _md5_feature(modality: str | None, payload: bytes | None) -> tuple:
+    b = payload or b""
+    digest = hashlib.md5(b).digest()
+    return modality, len(b), digest.hex(), [x / 255.0 for x in digest[:8]]
 
 
-def decode_image_stub(payload: bytes, fake: bool = False) -> list[float]:
-    """Placeholder for a real image decode + feature extraction.
-
-    Real implementation would use PIL/torchvision here. The fake path
-    derives an 8-dim feature deterministically from the payload bytes so
-    tests exercise the full distributed path.
-    """
-    if not fake:
-        raise NotImplementedError(
-            "image decoding requires PIL/libvips — not available in this environment"
-        )
-    digest = hashlib.md5(payload or b"").digest()
-    return [b / 255.0 for b in digest[:8]]
-
-
-def extract_features(
-    assets: DataFrame, fake_decode: bool = True, try_real: bool = False
-) -> DataFrame:
-    """Decode/feature-extract binary assets via an Arrow-batched
-    ``mapInPandas`` stage. Input schema: schemas.MULTIMODAL_ASSET.
-
-    ``try_real=True`` routes each payload through :func:`decode_image`
-    first (real pixel features for PPM/PGM/BMP/PNG), falling back to the
-    md5 pseudo-feature (``fake_decode=True``) or raising for payloads
-    no stdlib codec can parse. The default keeps the historical
-    fake-only behavior so existing oracle hashes stay stable."""
-
-    def one(b: bytes | None) -> list[float]:
-        b = b or b""
-        if try_real:
-            try:
-                return pixel_features(decode_image(b))
-            except (NotImplementedError, ValueError):
-                pass
-        return decode_image_stub(b, fake=fake_decode)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = pdf["payload"]
-            yield pd.DataFrame(
-                {
-                    "asset_id": pdf["asset_id"],
-                    "modality": pdf["modality"],
-                    "byte_len": payloads.map(lambda b: len(b) if b is not None else 0),
-                    "content_md5": payloads.map(
-                        lambda b: hashlib.md5(b or b"").hexdigest()
-                    ),
-                    "feature": payloads.map(one),
-                }
-            )
-
+def extract_features(assets: DataFrame) -> DataFrame:
+    """Per-asset byte length, content md5 and an 8-dim pseudo-feature
+    (the first 8 md5 digest bytes scaled to [0, 1]) through an
+    Arrow-batched ``mapInPandas`` stage. Input schema:
+    schemas.MULTIMODAL_ASSET. No pixels are decoded: a real feature
+    extractor would need an image model this environment lacks."""
     from movie_etl_spark.session import ensure_parallelism
 
-    return ensure_parallelism(assets).mapInPandas(run, schema=IMAGE_FEATURES_SCHEMA)
+    return _map_rows(
+        ensure_parallelism(assets), IMAGE_FEATURES_SCHEMA, _md5_feature,
+        ("modality", "payload"),
+    )
 
 
 DECODED_IMAGE_SCHEMA = StructType(
@@ -772,34 +510,28 @@ DECODED_IMAGE_SCHEMA = StructType(
 )
 
 
+def _image_stats(payload: bytes | None) -> tuple:
+    arr = decode_image(payload)
+    return (
+        *arr.shape,
+        int(arr.sum(dtype=np.int64)),
+        int(arr.min()),
+        int(arr.max()),
+    )
+
+
 def decode_images(assets: DataFrame) -> DataFrame:
     """REAL image decode to typed columns: every payload must parse via
-    :func:`decode_image` (PPM/PGM/BMP/PNG) — no fake fallback. Integer
-    pixel stats (sum/min/max) are exact, so the result is hash-stable
-    across engines and an oracle can recompute them from the same
-    source bytes. Arrow-batched ``mapInPandas``, same 100 TB shape as
-    :func:`extract_features`."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in (
-                "asset_id", "height", "width", "channels",
-                "pixel_sum", "pixel_min", "pixel_max",
-            )}
-            for aid, b in zip(pdf["asset_id"], pdf["payload"]):
-                arr = decode_image(bytes(b) if b is not None else None)
-                out["asset_id"].append(aid)
-                out["height"].append(arr.shape[0])
-                out["width"].append(arr.shape[1])
-                out["channels"].append(arr.shape[2])
-                out["pixel_sum"].append(int(arr.sum(dtype=np.int64)))
-                out["pixel_min"].append(int(arr.min()))
-                out["pixel_max"].append(int(arr.max()))
-            yield pd.DataFrame(out)
-
+    :func:`decode_image` — no fake fallback. Integer pixel stats
+    (sum/min/max) are exact, so the result is hash-stable across
+    engines and an oracle can recompute them from the same source
+    bytes."""
     from movie_etl_spark.session import ensure_parallelism
 
-    return ensure_parallelism(assets).mapInPandas(run, schema=DECODED_IMAGE_SCHEMA)
+    return _map_rows(
+        ensure_parallelism(assets), DECODED_IMAGE_SCHEMA, _image_stats,
+        ("payload",),
+    )
 
 
 def sample_frames(assets: DataFrame, every_ms: int = 1000) -> DataFrame:
@@ -868,42 +600,32 @@ def perceptual_hash(arr: np.ndarray) -> tuple[int, int]:
     return ahash, dhash
 
 
+def _image_hashes(payload: bytes | None) -> tuple:
+    arr = decode_image(payload)
+    return (arr.shape[0], arr.shape[1], *perceptual_hash(arr))
+
+
 def perceptual_hashes(assets: DataFrame) -> DataFrame:
     """REAL decode + perceptual hash per asset: every payload parses via
-    :func:`decode_image` (PPM/PGM/BMP/PNG), then ahash/dhash as above.
-    Exact-match hash groups are image-level duplicates; near-dups are
-    hamming-close hashes (band the 16/12 bits like dd3's LSH for a
-    join-based pairing at scale). Arrow-batched ``mapInPandas``, same
-    100 TB shape as :func:`decode_images`."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in ("asset_id", "height", "width", "ahash", "dhash")}
-            for aid, b in zip(pdf["asset_id"], pdf["payload"]):
-                arr = decode_image(bytes(b) if b is not None else None)
-                a, d = perceptual_hash(arr)
-                out["asset_id"].append(aid)
-                out["height"].append(arr.shape[0])
-                out["width"].append(arr.shape[1])
-                out["ahash"].append(a)
-                out["dhash"].append(d)
-            yield pd.DataFrame(out)
-
+    :func:`decode_image`, then ahash/dhash as above. Exact-match hash
+    groups are image-level duplicates; near-dups are hamming-close
+    hashes (band the 16/12 bits like dd3's LSH for a join-based pairing
+    at scale)."""
     from movie_etl_spark.session import ensure_parallelism
 
-    return ensure_parallelism(assets).mapInPandas(
-        run, schema=PERCEPTUAL_HASH_SCHEMA
+    return _map_rows(
+        ensure_parallelism(assets), PERCEPTUAL_HASH_SCHEMA, _image_hashes,
+        ("payload",),
     )
 
 
 # ---------------------------------------------------------------------------
-# GIF: the second compressed codec (after PNG/mm5) that a stdlib-only
-# environment can genuinely decode — LZW is pure integer table work, no
-# external library needed. Encoder + decoder are a matched pair; the
-# pytest property suite round-trips random index streams across code-width
-# growth and the 4096-entry table reset, and the mm7 oracle re-derives
-# exact pixels independently, so an off-by-one in the variable-width code
-# sync (the classic LZW bug class) cannot pass silently.
+# GIF: LZW is pure integer table work, so a stdlib-only environment can
+# decode it. Encoder + decoder are a matched pair; the pytest property
+# suite round-trips random index streams across code-width growth and the
+# 4096-entry table reset, and the mm7 oracle re-derives exact pixels
+# independently, so an off-by-one in the variable-width code sync (the
+# classic LZW bug class) cannot pass silently.
 # ---------------------------------------------------------------------------
 
 
@@ -1031,12 +753,11 @@ def _lzw_encode(indices: list[int], min_code_size: int) -> bytes:
 
 
 def _decode_gif(payload: bytes) -> np.ndarray:
-    """GIF87a/89a decode via the pure-Python LZW above: logical screen
-    descriptor, global/local color table, extension-block skipping,
-    first image descriptor -> H×W×3 RGB uint8 through the palette.
-    The 4-pass interlace layout is a REAL path (rows written in pass
-    order un-shuffle onto the 8/8/4/2-stride grid — r7b, round-trip
-    tested); malformed streams raise ValueError."""
+    """GIF decode via the pure-Python LZW above: logical screen
+    descriptor, global/local color table, first image descriptor ->
+    H×W×3 RGB uint8 through the palette. Extension blocks and
+    interlaced images raise ``NotImplementedError``; malformed streams
+    raise ``ValueError``."""
     if payload[:6] not in (b"GIF87a", b"GIF89a"):
         raise ValueError("not a GIF payload")
     if len(payload) < 13:
@@ -1057,12 +778,8 @@ def _decode_gif(payload: bytes) -> np.ndarray:
         pos += 1
         if block == 0x3B:  # trailer
             break
-        if block == 0x21:  # extension: label + sub-blocks
-            pos += 1
-            while pos < len(payload) and payload[pos] != 0:
-                pos += 1 + payload[pos]
-            pos += 1
-            continue
+        if block == 0x21:
+            raise NotImplementedError("GIF extension blocks not supported")
         if block != 0x2C:
             raise ValueError(f"unknown GIF block 0x{block:02x}")
         if pos + 9 > len(payload):
@@ -1072,7 +789,8 @@ def _decode_gif(payload: bytes) -> np.ndarray:
         pos += 9
         if width <= 0 or height <= 0:
             raise ValueError(f"invalid GIF dimensions {width}x{height}")
-        interlaced = bool(ipacked & 0x40)
+        if ipacked & 0x40:
+            raise NotImplementedError("interlaced GIF not supported")
         if ipacked & 0x80:  # local color table wins
             n = 2 << (ipacked & 0x07)
             palette = np.frombuffer(
@@ -1090,45 +808,22 @@ def _decode_gif(payload: bytes) -> np.ndarray:
             ln = payload[pos]
             lzw += payload[pos + 1 : pos + 1 + ln]
             pos += 1 + ln
-        pos += 1  # sub-block terminator
         indices = _lzw_decode(bytes(lzw), min_code_size)
         if len(indices) < width * height:
             raise ValueError("GIF pixel data underrun")
         idx = np.array(indices[: width * height], dtype=np.int64)
         if idx.max() >= palette.shape[0]:
             raise ValueError("GIF index outside color table")
-        img = palette[idx].reshape(height, width, 3)
-        if interlaced:
-            # GIF87a interlace: rows arrive in four passes (every 8th
-            # from 0, every 8th from 4, every 4th from 2, every 2nd
-            # from 1) — un-shuffle back to natural order
-            order = (
-                list(range(0, height, 8)) + list(range(4, height, 8))
-                + list(range(2, height, 4)) + list(range(1, height, 2))
-            )
-            out = np.empty_like(img)
-            out[order] = img
-            return out
-        return img
+        return palette[idx].reshape(height, width, 3)
     raise ValueError("GIF contains no image descriptor")
 
 
-def encode_gif(
-    indices: np.ndarray, palette: np.ndarray, interlace: bool = False
-) -> bytes:
+def encode_gif(indices: np.ndarray, palette: np.ndarray) -> bytes:
     """Minimal deterministic GIF87a encoder (asset synthesis +
     round-trip tests): one image, global color table from ``palette``
     ([n,3] uint8, n a power of two >= 4), pixels from ``indices``
-    ([H,W] ints); ``interlace=True`` writes rows in the four-pass
-    GIF order with the flag set. Real LZW compression via
-    :func:`_lzw_encode`."""
+    ([H,W] ints). Real LZW compression via :func:`_lzw_encode`."""
     height, width = indices.shape
-    if interlace:
-        order = (
-            list(range(0, height, 8)) + list(range(4, height, 8))
-            + list(range(2, height, 4)) + list(range(1, height, 2))
-        )
-        indices = indices[order]
     n = palette.shape[0]
     bits = max(2, (n - 1).bit_length())
     if n != 1 << bits:
@@ -1143,9 +838,7 @@ def encode_gif(
         sub.append(len(chunk))
         sub += chunk
     sub.append(0)
-    desc = b"\x2c" + struct.pack(
-        "<HHHHB", 0, 0, width, height, 0x40 if interlace else 0
-    )
+    desc = b"\x2c" + struct.pack("<HHHHB", 0, 0, width, height, 0)
     return (
         header + palette.astype(np.uint8).tobytes() + desc + bytes(sub)
         + b"\x3b"
@@ -1210,155 +903,66 @@ JPEG_FIDELITY_SCHEMA = StructType(
     ]
 )
 
+# reconstruction-error bounds of jpeg_fidelity_check: q90 noise images
+# measure mean <= 4.8 and max <= 16, and a Huffman desync, wrong quant
+# table or DCT sign error overshoots by an order of magnitude
+_JPEG_MEAN_TOL = 12.0
+_JPEG_MAX_TOL = 48
 
-def jpeg_fidelity_check(
-    assets: DataFrame,
-    mean_tol: float = 12.0,
-    max_tol: int = 48,
-) -> DataFrame:
+
+def _jpeg_fidelity(payload: bytes | None, reference: bytes | None) -> tuple:
+    arr = decode_image(payload)
+    refa = np.frombuffer(reference, dtype=np.uint8).reshape(
+        arr.shape[0], arr.shape[1], -1
+    )
+    err = np.abs(arr.astype(np.int64) - refa.astype(np.int64))
+    return (
+        *arr.shape,
+        bool(err.mean() <= _JPEG_MEAN_TOL),
+        bool(err.max() <= _JPEG_MAX_TOL),
+    )
+
+
+def jpeg_fidelity_check(assets: DataFrame) -> DataFrame:
     """Decode each JPEG ``payload`` (REAL decode via operators.jpeg)
     and compare against the uncompressed ``reference`` bytes: exact
     dims out, plus per-image error bounds as booleans.
 
     JPEG is lossy, so the mm3/mm5/mm7 exact-pixel oracle is
     impossible BY THE CODEC'S NATURE — the honest check is the ap1
-    pattern: assert reconstruction error within a tolerance that
-    carries a wide measured margin (q90 noise images measure
-    mean<=4.8/max<=16; defaults are 2.5-3x that), emitted as booleans
-    an oracle can state literally. A Huffman desync, wrong quant
-    table, or DCT sign error blows the tolerance by an order of
-    magnitude, so the check still bites. Same Arrow/mapInPandas
-    driver-free shape as :func:`decode_images`.
+    pattern: reconstruction error within a tolerance that carries a
+    wide measured margin (``_JPEG_MEAN_TOL``/``_JPEG_MAX_TOL`` are
+    2.5-3x the measured worst case), emitted as booleans an oracle can
+    state literally.
     """
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in (
-                "asset_id", "height", "width", "channels",
-                "mean_err_ok", "max_err_ok",
-            )}
-            for aid, payload, ref in zip(
-                pdf["asset_id"], pdf["payload"], pdf["reference"]
-            ):
-                arr = decode_image(bytes(payload))
-                refa = np.frombuffer(bytes(ref), dtype=np.uint8).reshape(
-                    arr.shape[0], arr.shape[1], -1
-                )
-                err = np.abs(
-                    arr.astype(np.int64) - refa.astype(np.int64)
-                )
-                out["asset_id"].append(aid)
-                out["height"].append(arr.shape[0])
-                out["width"].append(arr.shape[1])
-                out["channels"].append(arr.shape[2])
-                out["mean_err_ok"].append(bool(err.mean() <= mean_tol))
-                out["max_err_ok"].append(bool(err.max() <= max_tol))
-            yield pd.DataFrame(out)
-
-    return assets.mapInPandas(run, JPEG_FIDELITY_SCHEMA)
+    return _map_rows(
+        assets, JPEG_FIDELITY_SCHEMA, _jpeg_fidelity, ("payload", "reference")
+    )
 
 
 def encode_png_palette(
-    indices: np.ndarray,
-    palette: np.ndarray,
-    bit_depth: int = 8,
-    interlace: bool = False,
+    indices: np.ndarray, palette: np.ndarray, bit_depth: int = 8
 ) -> bytes:
     """Deterministic PALETTE PNG encoder (round-trip tests): [H,W]
     index array + [n,3] palette, bit depth 1/2/4/8 (MSB-first bit
-    packing), filter type 0 scanlines; ``interlace`` writes the seven
-    Adam7 passes (bit packing restarts per pass scanline)."""
-    import zlib
-
+    packing), filter type 0 scanlines."""
     if bit_depth not in (1, 2, 4, 8):
         raise ValueError(f"invalid palette bit depth {bit_depth}")
     height, width = indices.shape
     if indices.max(initial=0) >= min(palette.shape[0], 1 << bit_depth):
         raise ValueError("index outside palette/depth range")
     per_byte = 8 // bit_depth
-
-    def pack_rows(sub: np.ndarray) -> bytearray:
-        ph, pw = sub.shape
-        stride = (pw * bit_depth + 7) // 8
-        out = bytearray()
-        for y in range(ph):
-            out.append(0)  # filter None
-            packed = bytearray(stride)
-            for x in range(pw):
-                shift = 8 - bit_depth * (x % per_byte + 1)
-                packed[x // per_byte] |= int(sub[y, x]) << shift
-            out += packed
-        return out
-
+    stride = (width * bit_depth + 7) // 8
     body = bytearray()
-    if not interlace:
-        body += pack_rows(indices)
-    else:
-        for x0, y0, dx, dy in _ADAM7:
-            sub = indices[y0::dy, x0::dx]
-            if sub.size:
-                body += pack_rows(sub)
-
-    def chunk(ctype: bytes, data: bytes) -> bytes:
-        return (
-            struct.pack(">I", len(data)) + ctype + data
-            + struct.pack(">I", zlib.crc32(ctype + data) & 0xFFFFFFFF)
-        )
-
-    ihdr = struct.pack(
-        ">IIBBBBB", width, height, bit_depth, 3, 0, 0, int(interlace)
-    )
-    return (
-        b"\x89PNG\r\n\x1a\n"
-        + chunk(b"IHDR", ihdr)
-        + chunk(b"PLTE", palette.astype(np.uint8).tobytes())
-        + chunk(b"IDAT", zlib.compress(bytes(body), 6))
-        + chunk(b"IEND", b"")
-    )
-
-
-def encode_png_interlaced(arr: np.ndarray, filter_type: int = 0) -> bytes:
-    """Deterministic Adam7 INTERLACED PNG encoder (round-trip tests):
-    8-bit OR 16-bit gray/GA/RGB/RGBA, each pass extracted on the
-    standard grid; every scanline uses the same ``filter_type`` (0-4),
-    with filter state RESET per pass (the spec treats each pass as an
-    independent sub-image)."""
-    import zlib
-
-    if arr.ndim == 2:
-        arr = arr[:, :, None]
-    height, width, channels = arr.shape
-    color_type = {1: 0, 2: 4, 3: 2, 4: 6}[channels]
-    depth = 16 if arr.dtype == np.uint16 else 8
-    arr = arr.astype(">u2") if depth == 16 else arr.astype(np.uint8)
-    bpp = channels * (depth // 8)
-    body = bytearray()
-    for x0, y0, dx, dy in _ADAM7:
-        sub = arr[y0::dy, x0::dx, :]
-        if sub.size == 0:
-            continue
-        prev = np.zeros(sub.shape[1] * bpp, dtype=np.int32)
-        for y in range(sub.shape[0]):
-            line = np.frombuffer(sub[y].tobytes(), dtype=np.uint8).astype(
-                np.int32
-            )
-            body.append(filter_type)
-            body += _filter_scanline(line, prev, bpp, filter_type)
-            prev = line
-
-    def chunk(ctype: bytes, data: bytes) -> bytes:
-        return (
-            struct.pack(">I", len(data)) + ctype + data
-            + struct.pack(">I", zlib.crc32(ctype + data) & 0xFFFFFFFF)
-        )
-
-    ihdr = struct.pack(">IIBBBBB", width, height, depth, color_type, 0, 0, 1)
-    return (
-        b"\x89PNG\r\n\x1a\n"
-        + chunk(b"IHDR", ihdr)
-        + chunk(b"IDAT", zlib.compress(bytes(body), 6))
-        + chunk(b"IEND", b"")
-    )
+    for y in range(height):
+        body.append(0)  # filter None
+        packed = bytearray(stride)
+        for x in range(width):
+            shift = 8 - bit_depth * (x % per_byte + 1)
+            packed[x // per_byte] |= int(indices[y, x]) << shift
+        body += packed
+    ihdr = struct.pack(">IIBBBBB", width, height, bit_depth, 3, 0, 0, 0)
+    return _png_file(ihdr, bytes(body), palette.astype(np.uint8).tobytes())
 
 
 def palette_png_encoder_udf(height: int, width: int):

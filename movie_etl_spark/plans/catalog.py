@@ -79,6 +79,36 @@ def dec_sum(col, alias: str, scale: int = 2):
     )
 
 
+def _with_grand_total(
+    agg: DataFrame, keys: list[str], counts: list[str]
+) -> DataFrame:
+    """A ROLLUP/CUBE result with its grand-total row guaranteed.
+
+    Spark's grouping-set aggregate emits no grand-total row for an empty
+    input, where SQL's ROLLUP/CUBE emits one (counts 0, sums NULL).
+    ``agg`` carries ``grouping_id()`` as ``_gid``. One literal
+    grand-total row (``counts`` 0, other metrics NULL) is unioned into
+    the aggregated output and merged by ``max`` per group, so a real
+    total wins and the table is scanned once."""
+    total_gid = (1 << len(keys)) - 1
+    metrics = [c for c in agg.columns if c not in keys and c != "_gid"]
+
+    def typed(c: str, v):
+        return F.lit(v).cast(agg.schema[c].dataType).alias(c)
+
+    zero = agg.sparkSession.range(1).select(
+        *[typed(k, None) for k in keys],
+        *[typed(c, 0 if c in counts else None) for c in metrics],
+        typed("_gid", total_gid),
+    )
+    return (
+        agg.unionByName(zero)
+        .groupBy(*keys, "_gid")
+        .agg(*[F.max(c).alias(c) for c in metrics])
+        .drop("_gid")
+    )
+
+
 # =====================================================================
 # §2.1 sources / scans + §2.2 filters / projections
 # =====================================================================
@@ -461,9 +491,17 @@ def q_a2_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_a3_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     l = _t(spark, sf_dir, "lineitem")
+    keys = ["l_returnflag", "l_linestatus"]
     return (
-        l.rollup("l_returnflag", "l_linestatus")
-        .agg(F.count("*").alias("n"), dec_sum("l_quantity", "sum_qty"))
+        _with_grand_total(
+            l.rollup(*keys).agg(
+                F.count("*").alias("n"),
+                dec_sum("l_quantity", "sum_qty"),
+                F.grouping_id().alias("_gid"),
+            ),
+            keys,
+            counts=["n"],
+        )
         .select(
             F.coalesce("l_returnflag", F.lit("ALL")).alias("returnflag"),
             F.coalesce("l_linestatus", F.lit("ALL")).alias("linestatus"),
@@ -1033,15 +1071,15 @@ def _fake_assets(spark: SparkSession, sf_dir: str) -> DataFrame:
            8 AS feature_dim
     FROM documents
     """,
-    doc="multimodal decode/feature plumbing: binary payloads through an "
-    "Arrow-batched mapInPandas stage (operators.multimodal.extract_features; "
-    "decode itself is honestly stubbed — byte_len/md5/shape are real). The "
-    "float feature vector is projected to its dimension here because "
-    "float32-vs-float64 canon differs across engines",
+    doc="multimodal feature plumbing: binary payloads through an "
+    "Arrow-batched mapInPandas stage (operators.multimodal.extract_features: "
+    "byte_len, md5 and an 8-dim md5 pseudo-feature; no pixels are "
+    "decoded). The float feature vector is projected to its dimension here "
+    "because float32-vs-float64 canon differs across engines",
 )
 def q_mm1_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     assets = _fake_assets(spark, sf_dir)
-    feats = extract_features(assets, fake_decode=True)
+    feats = extract_features(assets)
     return feats.select(
         "asset_id",
         "modality",
@@ -1097,9 +1135,8 @@ def q_mm2_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     "back into H*W*C pixels via Arrow-batched mapInPandas — exact "
     "integer pixel stats out. The oracle independently re-derives the "
     "same bytes from md5's hex digits, so a single mis-parsed pixel "
-    "breaks the hash. PPM/PGM/BMP are the honest ceiling of a "
-    "stdlib-only environment; compressed codecs still raise "
-    "NotImplementedError (documented in multimodal.py)",
+    "breaks the hash. multimodal.py lists the formats decode_image "
+    "reads; any other variant raises NotImplementedError or ValueError",
 )
 def q_mm3_image_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     from movie_etl_spark.operators.multimodal import decode_images
@@ -1201,8 +1238,8 @@ def q_mm4_audio_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(list_max(bytes) AS INT) AS pixel_max
     FROM b
     """,
-    doc="REAL compressed-codec decode (closes the r6 'PNG needs an external "
-    "library' gap): each document's 16 md5 digest bytes become the RGBA "
+    doc="REAL compressed-codec decode: each document's 16 md5 digest "
+    "bytes become the RGBA "
     "pixels of a genuine zlib-compressed PNG file (filter type = doc_id % 5, "
     "so all five scanline predictors — None/Sub/Up/Average/Paeth — are "
     "exercised across the corpus), built by an Arrow-vectorized pandas_udf "
@@ -1210,9 +1247,9 @@ def q_mm4_audio_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     "chunk-walking decoder (multimodal._decode_png: CRC check, IDAT "
     "inflate, per-scanline unfilter) via decode_images' mapInPandas. The "
     "oracle re-derives the exact pixel stats from md5's hex digits, so one "
-    "wrong predictor byte anywhere breaks the hash. JPEG/MP3 remain the "
-    "honest NotImplementedError ceiling (DCT entropy coding needs a codec "
-    "library)",
+    "wrong predictor byte anywhere breaks the hash. The decoder reads "
+    "sequential 8-bit and palette PNG only; Adam7, 16-bit, low-bit gray "
+    "and tRNS raise NotImplementedError",
 )
 def q_mm5_png_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     from movie_etl_spark.operators.multimodal import (
@@ -1682,7 +1719,7 @@ def q_w2_running(spark: SparkSession, sf_dir: str) -> DataFrame:
     "exact distinct count plus a boolean asserting the HLL estimate (rsd "
     "0.02) landed within ±5 percent of it, and the oracle computes the exact "
     "side with literal TRUE — upgrading ap1 from the catalog's last "
-    "rows-only row to a full hash check (r6 verdict #6). An estimate "
+    "rows-only row to a full hash check. An estimate "
     "drifting outside the band now breaks the hash instead of passing "
     "silently",
 )
@@ -1969,7 +2006,7 @@ _G2_REL_CASE = """CASE didx
       CAST(COALESCE(sum(company_id + parent), 0) AS BIGINT)
       FROM comp WHERE parent IS NOT NULL
     """,
-    doc="full-pipeline graph parity (r7 verdict item #6): the reference's "
+    doc="full-pipeline graph parity: the reference's "
     "top-level flow — raw nested movie docs -> clean_movie_details (C1) -> "
     "plans.graph.build_movie_graph (flows/etl_flow.py:538-586: 8 node "
     "labels, 9 edge types incl. the 11-department CREW fan-out, watch-"
@@ -2047,7 +2084,7 @@ def q_g2_full_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     def id_name(idc):
         return F.struct(idc.cast("int").alias("id"), F.lit("n").alias("name"))
 
-    # SHUFFLE_HASH on the skinny side (r13): the planner's default here
+    # SHUFFLE_HASH on the skinny side: the planner's default here
     # was a SortMergeJoin whose fat-side Sort — the collect_list'ed
     # cast/crew arrays — spilled 4.75 GB at sf3 (per-stage spill attribution,
     # BASELINE.md "r13: graph family at the 100x point"). Building the
@@ -2093,8 +2130,8 @@ def q_g2_full_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.concat(F.lit("tt"), ok.cast("string")).alias("imdb_id"),
         ).alias("external_ids"),
     )
-    # one materialization feeds all 17 branch aggregates. DISK_ONLY
-    # (r11, VERDICT r10 item 4): the doc corpus is the fat frame here
+    # one materialization feeds all 17 branch aggregates. DISK_ONLY:
+    # the doc corpus is the fat frame here
     # (nested cast/crew arrays); letting its checkpoint blocks occupy
     # the storage half of unified memory starved execution at sf3/8g
     # (SparkOutOfMemoryError UNABLE_TO_ACQUIRE_MEMORY). On disk the
@@ -2411,7 +2448,7 @@ def q_st4_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The returned lazy DataFrame reads this dir, so it must outlive the
     # function — but not the process: register end-of-session cleanup so
     # repeated factor-100 runs don't accumulate multi-hundred-MB sink
-    # dirs in /tmp (ADVICE r13).
+    # dirs in /tmp.
     atexit.register(shutil.rmtree, out_dir, ignore_errors=True)
     try:
         with bounded_state_partitions(spark, rocksdb=True):
@@ -2431,7 +2468,7 @@ def q_st4_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         # dir outlives this function (session-temp cleanup above); the
         # checkpoint is deleted (it pins the state-store provider).
         # Explicit schema: a zero-row sink has no footer to infer from
-        # (ADVICE r13) — unreachable today behind the 2M-row gate, but
+        # — unreachable today behind the 2M-row gate, but
         # the read must not depend on that.
         return spark.read.schema(sink_schema).parquet(out_dir).select(*sel)
     finally:
@@ -2799,9 +2836,15 @@ def q_j7_range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_a5_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = _t(spark, sf_dir, "orders")
-    return o.cube("o_orderstatus", "o_orderpriority").agg(
-        F.count("*").alias("n_orders"),
-        dec_sum("o_totalprice", "total_price"),
+    keys = ["o_orderstatus", "o_orderpriority"]
+    return _with_grand_total(
+        o.cube(*keys).agg(
+            F.count("*").alias("n_orders"),
+            dec_sum("o_totalprice", "total_price"),
+            F.grouping_id().alias("_gid"),
+        ),
+        keys,
+        counts=["n_orders"],
     )
 
 
@@ -3330,7 +3373,7 @@ def q_dd6_embedding_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = _t(spark, sf_dir, "embeddings")
     # band_size pinned: the DuckDB oracle hashes the fixed 4x6-bit
     # layout; the operator default (None) is corpus-sized via
-    # dedup.recommended_band_size (VERDICT r10 item 3)
+    # dedup.recommended_band_size
     return embedding_near_dup_pairs(
         e, "embedding", "vec_id", cosine_threshold=0.4, band_size=6
     )
@@ -4664,13 +4707,12 @@ def q_t7_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     "genuine GIF87a file over the 256-gray global color table "
     "(multimodal.encode_gif: REAL variable-width LZW with clear/EOI "
     "codes and dictionary growth), and multimodal._decode_gif walks "
-    "the actual format back — screen descriptor, color table, "
-    "extension skipping, LZW inflate with the one-entry-behind width "
-    "sync, palette mapping to HxWx3 RGB. The oracle re-derives exact "
-    "pixel stats from md5 hex digits (gray palette => pixel_sum = 3 * "
-    "byte sum), so a single LZW desync anywhere breaks the hash. "
-    "JPEG/MP3 (DCT/MDCT entropy codecs) remain the honest "
-    "NotImplementedError ceiling",
+    "the actual format back — screen descriptor, color table, LZW "
+    "inflate with the one-entry-behind width sync, palette mapping to "
+    "HxWx3 RGB. The oracle re-derives exact pixel stats from md5 hex "
+    "digits (gray palette => pixel_sum = 3 * byte sum), so a single LZW "
+    "desync anywhere breaks the hash. GIF extension blocks and "
+    "interlace raise NotImplementedError",
 )
 def q_mm7_gif_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     from movie_etl_spark.operators.multimodal import (
@@ -4694,9 +4736,8 @@ def q_mm7_gif_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
            TRUE AS mean_err_ok, TRUE AS max_err_ok
     FROM documents
     """,
-    doc="REAL baseline JPEG codec (operators/jpeg.py, pure numpy+stdlib "
-    "— overturns the r6 adjudication that JPEG needs an external "
-    "library, the same way mm5 overturned it for PNG): each document's "
+    doc="REAL baseline grayscale JPEG codec (operators/jpeg.py, pure "
+    "numpy+stdlib, no codec library): each document's "
     "16 md5 bytes become a 4x4 grayscale image, ENCODED to a genuine "
     "baseline JFIF stream (8x8 float64 DCT, Annex-K quality-scaled "
     "quant tables, canonical Huffman, byte stuffing, tables written "
@@ -4708,12 +4749,9 @@ def q_mm7_gif_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     "(tolerances carry 2-2.5x margin over the measured corpus worst "
     "case: mean<=12 vs 5.8 observed, max<=48 vs 19). A Huffman "
     "desync, quant-table mixup, or DCT sign error overshoots by an "
-    "order of magnitude, so the check still bites. "
-    "Progressive (SOF2 spectral selection + DC successive "
-    "approximation, AND full AC successive-approximation refinement — "
-    "the complete progressive feature set) and 4:2:0/4:2:2 subsampling "
-    "are ALSO real decode paths (r7b); the honest remainder is "
-    "arithmetic coding, 12-bit, and hierarchical",
+    "order of magnitude, so the check still bites. Progressive, "
+    "colour, non-1x1-sampled, restart-interval, arithmetic-coded, 12-bit "
+    "and hierarchical JPEG raise NotImplementedError",
 )
 def q_mm8_jpeg_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     from movie_etl_spark.operators.multimodal import (
@@ -4844,16 +4882,16 @@ def q_dd10_fuzzy_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     WITH v AS (
       SELECT
-        CAST(sum(CASE WHEN o_custkey IS NULL THEN 1 ELSE 0 END)
+        CAST(coalesce(sum(CASE WHEN o_custkey IS NULL THEN 1 ELSE 0 END), 0)
              AS BIGINT) AS v0,
         CAST(count(*) - count(DISTINCT o_orderkey) AS BIGINT) AS v1,
-        CAST(sum(CASE WHEN o_totalprice IS NOT NULL
+        CAST(coalesce(sum(CASE WHEN o_totalprice IS NOT NULL
                        AND (o_totalprice < 0 OR o_totalprice > 1000000)
-                      THEN 1 ELSE 0 END) AS BIGINT) AS v2,
-        CAST(sum(CASE WHEN o_orderpriority IS NOT NULL
+                      THEN 1 ELSE 0 END), 0) AS BIGINT) AS v2,
+        CAST(coalesce(sum(CASE WHEN o_orderpriority IS NOT NULL
                        AND o_orderpriority NOT IN
                            ('1-URGENT', '2-HIGH', '3-MEDIUM')
-                      THEN 1 ELSE 0 END) AS BIGINT) AS v3
+                      THEN 1 ELSE 0 END), 0) AS BIGINT) AS v3
       FROM orders
     )
     SELECT rule_id, passed, violations FROM (
@@ -4871,7 +4909,9 @@ def q_dd10_fuzzy_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     "passes over the data — the 100 TB property), stacked to one row "
     "per rule. The accepted-values rule is deliberately too strict "
     "(3 of TPC-H's 5 priorities) so the report exercises the FAILING "
-    "path with real violation counts, not just a page of greens. The "
+    "path with real violation counts, not just a page of greens. On an "
+    "empty table every rule passes with 0 violations (nothing to check "
+    "is nothing violated), so the oracle coalesces its sums to 0. The "
     "reference delegates this to store constraints (Postgres ON "
     "CONFLICT, Neo4j uniqueness — SURVEY §2.7); plain parquet makes "
     "it a query",
@@ -5267,17 +5307,15 @@ def q_ts1_gap_fill_locf(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(list_max(px) AS INT) AS pixel_max
     FROM b
     """,
-    doc="REAL palette-PNG decode (closes another r6-era codec-variant "
-    "gap alongside Adam7 interlace — both now real paths in "
-    "multimodal._decode_png): each document's md5 high nibbles become "
+    doc="REAL palette-PNG decode (multimodal._decode_png): each "
+    "document's md5 high nibbles become "
     "4-bit palette indices over a 16-gray ramp (PLTE), packed "
     "MSB-first two-per-byte, zlib-compressed, and decoded back through "
     "sub-byte unpacking + palette lookup. The oracle re-derives exact "
     "pixels from the md5 hex digits (pixel = 17 * high-nibble), so a "
-    "single bit-unpack or PLTE-order error breaks the hash. As of r8 "
-    "the PNG decoder has NO remaining layout gaps: 16-bit, palette "
-    "tRNS alpha, low-bit grayscale, and Adam7 interlace for all of "
-    "those are real, round-trip-tested paths (test_multimodal)",
+    "single bit-unpack or PLTE-order error breaks the hash. Palette "
+    "depths 1/2/4/8 share this one unpack path; tRNS alpha and Adam7 "
+    "raise NotImplementedError",
 )
 def q_mm9_palette_png(spark: SparkSession, sf_dir: str) -> DataFrame:
     from movie_etl_spark.operators.multimodal import (
@@ -5331,9 +5369,9 @@ def q_mm9_palette_png(spark: SparkSession, sf_dir: str) -> DataFrame:
     "BIT-EXACTLY against stdlib audioop for all 256 code points). "
     "The oracle re-derives the same expansion in pure SQL bit "
     "arithmetic (u = 255 - byte; +-(((u&15)*8 + 132) << exp) - 132), "
-    "so one wrong code point breaks the hash. A-law (tag 6) is the "
-    "sibling path, pytest-verified; other compressed tags (MP3's tag "
-    "85 etc.) honestly raise",
+    "so one wrong code point breaks the hash. A-law (tag 6), 8-bit "
+    "PCM and other compressed tags (MP3's tag 85 etc.) raise "
+    "NotImplementedError",
 )
 def q_mm10_g711_audio(spark: SparkSession, sf_dir: str) -> DataFrame:
     import struct as _struct
